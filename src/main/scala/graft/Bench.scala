@@ -354,10 +354,14 @@ object Bench {
     // line is the LAST thing written so the tail window always contains it.
     System.err.println(
       s"[benchdiag] ${diagnostics.length} bytes -> target/bench_diagnostics.json")
-    graft.ops.Materialize.clearCache()
-    spark.stop()
-    println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"failed":${errors.size},"contended":$contended,"fixturePrepFailed":$fixturePrepFailed,"sf":"$sfDir"}""")
-    System.out.flush()
+    // a throw from teardown must not swallow the headline metric line
+    try {
+      graft.ops.Materialize.clearCache()
+      spark.stop()
+    } finally {
+      println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"failed":${errors.size},"contended":$contended,"fixturePrepFailed":$fixturePrepFailed,"sf":"$sfDir"}""")
+      System.out.flush()
+    }
   }
 
   /** Newest committed bench record in the working dir, parsed to per-query

@@ -34,9 +34,11 @@ import org.apache.spark.unsafe.types.UTF8String
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
+  // the long branch reads every slot with getLong, where a null element
+  // would silently count as 0L — so it accepts only null-free arrays
   private def elemType(dt: DataType): Option[DataType] = dt match {
     case ArrayType(StringType, _) => Some(StringType)
-    case ArrayType(LongType, _) => Some(LongType)
+    case ArrayType(LongType, false) => Some(LongType)
     case _ => None
   }
 
@@ -45,7 +47,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       case (Some(a), Some(b)) if a == b => TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
         "sorted_intersect_count expects (array<string>, array<string>) " +
-          "or (array<bigint>, array<bigint>)")
+          "or (array<bigint>, array<bigint>) whose elements cannot be null")
     }
 
   override def dataType: DataType = IntegerType

@@ -1,28 +1,26 @@
 package graft.ops
 
-/** External commit arbiter for standing-state stores on filesystems
-  * that cannot supply the protocol's two atomic primitives themselves.
+/** The commit arbiter behind every standing-state store: one
+  * conditional put claims [[StandingState]]'s writer lease, one claims
+  * each snapshot number before its publish. Everything else (immutable
+  * data partitions, witness verification, base-latest checks) already
+  * tolerates non-atomic filesystems, because files are only ever
+  * referenced by a witness that commits after them.
   *
-  * The [[StandingState]] exactly-once story rests on (a) a
-  * create-exclusive writer lease and (b) one atomic publish of each
-  * snapshot's witness. HDFS and POSIX filesystems provide both; object
-  * stores provide NEITHER — "rename" is copy-then-delete, and
-  * create-no-overwrite is check-then-create (the reference's own
-  * archive tier is S3 via hadoop-aws, `SubTableScanBuilder.java:
-  * 106-112`, so this is the deployment reality, not a corner case).
-  * Iceberg solves it by moving the commit decision to a catalog swap;
-  * this trait is the same idea reduced to its minimal primitive: a
-  * CONDITIONAL PUT on an external coordination store. One conditional
-  * put claims the lease; one claims each snapshot number. Everything
-  * else (immutable data partitions, witness verification, base-latest
-  * checks) already tolerates non-atomic filesystems because files are
-  * only ever referenced by a witness that commits after them.
+  * A store's arbiter is EXTERNAL when registered or configured
+  * (`spark.graft.state.arbiter`) — required on object stores, where
+  * "rename" is copy-then-delete and create-no-overwrite is
+  * check-then-create (the reference's own archive tier is S3 via
+  * hadoop-aws, `SubTableScanBuilder.java:106-112`); Iceberg's catalog
+  * swap reduced to its minimal primitive. Otherwise it is the store's
+  * own [[FsArbiter]], on filesystems whose rename is atomic.
   *
   * Contract: `putIfAbsent` must be ATOMIC (exactly one concurrent
   * caller wins), `deleteIf` must be an atomic compare-and-delete.
   * DynamoDB conditional writes, etcd transactions, or any RDBMS unique
   * insert satisfy this; [[graft.sources.dsv2.DynamoArbiter]] is the
-  * wire implementation over public DynamoDB conditional-put JSON. */
+  * wire implementation over public DynamoDB conditional-put JSON.
+  * [[FsArbiter]] holds it only as far as the filesystem does. */
 trait CommitArbiter {
   /** Atomically create `key → body` iff `key` is absent. True iff THIS
     * call created it. */
@@ -52,8 +50,8 @@ object CommitArbiter {
     * the OTHER store's live lease). A schemeless spelling defaults to
     * `file` with empty authority, so `/tmp/x` and `file:/tmp/x` — the
     * local respellings of one store — still agree; any store that
-    * actually NEEDS an arbiter carries an explicit object-store scheme
-    * and is keyed exactly. */
+    * actually NEEDS an external arbiter carries an explicit object-store
+    * scheme and is keyed exactly. */
   def storeKey(store: String): String = {
     val u = new org.apache.hadoop.fs.Path(store).toUri
     val scheme = Option(u.getScheme).getOrElse("file")
@@ -61,6 +59,18 @@ object CommitArbiter {
     val path = Option(u.getPath).filter(_.nonEmpty).getOrElse(store)
     s"$scheme://$auth$path"
   }
+
+  /** The writer-lease key of `store`. Keys are AUTHORITY-QUALIFIED
+    * ([[storeKey]]) so same-path stores in different buckets can share
+    * one arbiter table without colliding — a path-only key would let
+    * `s3a://bucket-a/x`'s retake compare-and-delete `s3a://bucket-b/x`'s
+    * LIVE lease. */
+  def leaseKey(store: String): String = s"lease:${storeKey(store)}"
+
+  /** The claim key of one snapshot (`snapName`, e.g. `snap00001`) of
+    * `store`. */
+  def claimKey(store: String, snapName: String): String =
+    s"snap:${storeKey(store)}:$snapName"
 
   /** Register an arbiter for one store root (keyed by [[storeKey]] —
     * scheme+authority+path, so same-path stores in different buckets
@@ -71,11 +81,12 @@ object CommitArbiter {
 
   def unregister(store: String): Unit = registry.remove(storeKey(store))
 
-  /** The arbiter governing `store`: an explicit registration wins, else
-    * the session-wide `spark.graft.state.arbiter` spec
-    * (`memory:<name>` for the process-local map — tests and single-JVM
-    * demos — or a `dynamo://host:port/Table` / `dynamos://…` endpoint
-    * for the conditional-put wire). */
+  /** The EXTERNAL arbiter governing `store`, if any: an explicit
+    * registration wins, else the session-wide `spark.graft.state.arbiter`
+    * spec (`memory:<name>` for the process-local map — tests and
+    * single-JVM demos — or a `dynamo://host:port/Table` / `dynamos://…`
+    * endpoint for the conditional-put wire). None means the store's own
+    * [[FsArbiter]] arbitrates. */
   def forStore(
       spark: org.apache.spark.sql.SparkSession,
       store: String): Option[CommitArbiter] =
@@ -118,4 +129,73 @@ object InMemoryArbiter {
     new java.util.concurrent.ConcurrentHashMap[String, InMemoryArbiter]()
   def named(name: String): InMemoryArbiter =
     instances.computeIfAbsent(name, _ => new InMemoryArbiter())
+}
+
+/** The filesystem's own commit arbiter for ONE store: the lease is the
+  * file `<store>/_LEASE` (owner, nonce, acquisition epoch millis) and
+  * each snapshot claim `<store>/_CLAIM-snap<n>`, names the snapshot
+  * listing and the orphan sweep never touch. `putIfAbsent` is a
+  * create-exclusive write: only "already exists" means refused, any
+  * other I/O error (permissions, the store path is a file) is rethrown
+  * as itself. `get` reads the file; a record it cannot read (absent, or
+  * torn by a racing writer so its checksum fails) is None, which every
+  * protocol step treats as "not mine". `deleteIf` is read-compare-delete.
+  *
+  * Exclusivity is only as atomic as the filesystem's create: HDFS's is,
+  * Hadoop's LocalFileSystem is check-then-create, and `deleteIf` is not
+  * a CAS anywhere. So on local disk the records narrow the interleaving
+  * window rather than close it, and the witness-directory rename stays
+  * the arbiter of record — which is why [[StandingState]] uses this
+  * arbiter only on filesystems with atomic rename. */
+final class FsArbiter(fs: org.apache.hadoop.fs.FileSystem, store: String)
+    extends CommitArbiter {
+  import FsArbiter._
+
+  private val leaseKey = CommitArbiter.leaseKey(store)
+  private val claimPrefix = CommitArbiter.claimKey(store, "")
+
+  private def pathOf(key: String): org.apache.hadoop.fs.Path =
+    if (key == leaseKey) new org.apache.hadoop.fs.Path(s"$store/$LeaseFile")
+    else if (key.startsWith(claimPrefix))
+      new org.apache.hadoop.fs.Path(s"$store/$ClaimPrefix${key.stripPrefix(claimPrefix)}")
+    else throw new IllegalArgumentException(
+      s"arbiter key '$key' does not belong to store $store")
+
+  override def putIfAbsent(key: String, body: String): Boolean =
+    try {
+      val os = fs.create(pathOf(key), false)
+      try os.write(body.getBytes("UTF-8")) finally os.close()
+      true
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case _: java.nio.file.FileAlreadyExistsException => false
+      // raw create-exclusive refusals surface as bare IOException on
+      // some Hadoop filesystems — match the documented message shape,
+      // rethrow everything else (a permissions error is not a lease)
+      case e: java.io.IOException
+          if Option(e.getMessage).exists(_.toLowerCase.contains("already exists")) => false
+    }
+
+  override def get(key: String): Option[String] =
+    try {
+      val is = fs.open(pathOf(key))
+      try Some(scala.io.Source.fromInputStream(is, "UTF-8").mkString)
+      finally is.close()
+    } catch { case _: java.io.IOException => None }
+
+  override def deleteIf(key: String, expect: String): Boolean =
+    get(key).contains(expect) && fs.delete(pathOf(key), false)
+
+  override def delete(key: String): Unit = { fs.delete(pathOf(key), false); () }
+}
+
+object FsArbiter {
+  private val LeaseFile = "_LEASE"
+  private val ClaimPrefix = "_CLAIM-"
+
+  /** `store`'s own arbiter, on the filesystem the session resolves for it. */
+  def apply(spark: org.apache.spark.sql.SparkSession, store: String): FsArbiter =
+    new FsArbiter(
+      new org.apache.hadoop.fs.Path(store).getFileSystem(spark.sessionState.newHadoopConf()),
+      store)
 }

@@ -138,11 +138,19 @@ object Dedup {
     * string domain's, while joins and the sorted-merge verify move and
     * compare 8-byte longs instead of 16-char UTF8 strings (guide §2.3
     * "narrower types"). Both sides of a verify must re-encode (the sort
-    * order changes domain, consistently). */
+    * order changes domain, consistently). Any other token (a word, a
+    * null, upper-case hex) fails the query instead of merging tokens; the
+    * unreachable coalesce default only types the elements non-null, as
+    * [[graft.functions.SortedIntersectCount]]'s long branch requires. */
   def hex16ToLongs(arr: Column): Column =
-    transform(arr, t =>
-      shiftleft(conv(substring(t, 1, 8), 16, 10).cast("long"), 32)
-        .bitwiseOR(conv(substring(t, 9, 8), 16, 10).cast("long")))
+    transform(arr, t => coalesce(
+      when(t.rlike("^[0-9a-f]{16}$"),
+        shiftleft(conv(substring(t, 1, 8), 16, 10).cast("long"), 32)
+          .bitwiseOR(conv(substring(t, 9, 8), 16, 10).cast("long")))
+        .otherwise(raise_error(concat(
+          lit("hex16ToLongs: token is not 16 lower-case hex characters: "),
+          coalesce(t, lit("null"))))),
+      lit(0L)))
 
   /** Word shingles of size n (full text as one shingle if shorter). */
   def shingles(textCol: String, n: Int): Column = {

@@ -21,7 +21,12 @@ import org.apache.spark.sql.functions._
   *   <store>/data/<table>/p<snap>-<hex>/   immutable data partitions
   *   <store>/snap<n>/_WITNESS              snapshot manifest (commit point)
   *   <store>/_LEASE                        writer lease (concurrency gate)
+  *   <store>/_CLAIM-snap<n>                in-flight snapshot claim
   * }}}
+  *
+  * `_LEASE` and `_CLAIM-*` are the store's own [[FsArbiter]] records;
+  * a store behind an external [[CommitArbiter]] (object stores) keeps
+  * them at that arbiter instead, under the same keys.
   *
   * A snapshot's witness lists, per table, every file of every partition
   * that snapshot includes — (relpath, length, mtime), root-relative and
@@ -32,19 +37,27 @@ import org.apache.spark.sql.functions._
   * write volume is sized by the delta, not the standing corpus.
   *
   * Commit protocol (crash-atomic, loudly concurrent-safe):
-  *   1. take the writer lease (`_LEASE`, create-exclusive). A second
-  *      concurrent writer fails HERE with [[StaleStateException]] — at
-  *      start, not at the next read. A retrying writer (same `owner`
-  *      token, e.g. a restarted stream batch) may re-take its own lease.
+  *   1. take the writer lease: one conditional put at the store's
+  *      [[CommitArbiter]] (an external one when configured, else the
+  *      store's [[FsArbiter]]). A second concurrent writer fails HERE
+  *      with [[StaleStateException]] — at start, not at the next read. A
+  *      retrying writer (same `owner` token, e.g. a restarted stream
+  *      batch) may re-take its own lease; with the opt-in
+  *      `spark.graft.state.leaseTtlMs` an expired lease is seized with
+  *      fencing.
   *   2. verify the base snapshot's witness (tamper gate, below) and that
   *      the base is still the LATEST snapshot — folding from a stale
   *      base would silently drop another writer's fold.
   *   3. write the new data partitions (fresh uniquely-named dirs — a
   *      crash here leaves only unreferenced orphans, swept by the next
   *      [[keepSnapshots]]).
-  *   4. write the witness into a temp dir and RENAME it to `snap<n>` —
-  *      the one atomic step; a snapshot either exists complete or not
-  *      at all. Release the lease.
+  *   4. claim snapshot `n` by conditional put at the same arbiter, and
+  *      refuse if the lease is no longer this writer's (a TTL seize or
+  *      an explicit break since step 1). Then write the witness into a
+  *      temp dir and RENAME it to `snap<n>` — on a filesystem the one
+  *      atomic step and the arbiter of record; a snapshot either exists
+  *      complete or not at all. Release the claim, then the lease
+  *      (compare-and-delete: only this acquisition's record).
   *
   * Idempotent replay: a commit carries an `owner` token; if the latest
   * snapshot was committed by the same owner the fold is SKIPPED — the
@@ -96,7 +109,6 @@ object StandingState {
     * keys render useless. */
   private[graft] val ProbeLiteralCap = 768
   private val WitnessFile = "_WITNESS"
-  private val LeaseFile = "_LEASE"
   private val SnapPrefix = "snap"
 
   // ------------------------------------------------------------ fs utils
@@ -473,7 +485,7 @@ object StandingState {
     * two primitives the commit protocol's exactly-once pins rest on.
     * POSIX rename and HDFS rename are atomic; LocalFileSystem's
     * create-exclusive is check-then-create but its RENAME is the
-    * arbiter of record (documented at [[acquireLease]]), so `file` is
+    * arbiter of record (documented at [[FsArbiter]]), so `file` is
     * safe. */
   private val AtomicRenameSchemes =
     Set("file", "local", "hdfs", "viewfs", "webhdfs", "ofs", "o3fs")
@@ -499,15 +511,14 @@ object StandingState {
   }
 
   /** The write-path gate, checked before any lease is taken: a store on
-    * a non-atomic filesystem is REFUSED at open unless an external
+    * a non-atomic filesystem is REFUSED at open unless an EXTERNAL
     * [[CommitArbiter]] supplies the atomic primitives (the
-    * Iceberg-catalog analog — see [[CommitArbiter]]'s doc). Reads stay
-    * free everywhere: immutable files + witness verification don't
-    * need rename atomicity. */
-  private def ensureCommitCapable(
-      spark: SparkSession, store: String): Option[CommitArbiter] = {
-    val arb = CommitArbiter.forStore(spark, store)
-    if (arb.isEmpty && !fsCommitSafe(spark, store)) {
+    * Iceberg-catalog analog — see [[CommitArbiter]]'s doc); the store's
+    * own [[FsArbiter]] does not count, its records are only as atomic as
+    * the filesystem. Reads stay free everywhere: immutable files +
+    * witness verification don't need rename atomicity. */
+  private def ensureCommitCapable(spark: SparkSession, store: String): Unit =
+    if (CommitArbiter.forStore(spark, store).isEmpty && !fsCommitSafe(spark, store)) {
       val scheme = Option(fs(spark, store).getScheme).getOrElse("?")
       val kind =
         if (ObjectStoreSchemes.contains(scheme)) "an object store"
@@ -523,124 +534,40 @@ object StandingState {
           "If this filesystem's rename really is atomic, set " +
           "spark.graft.state.assumeAtomicRename=true instead.")
     }
-    arb
-  }
 
   // ------------------------------------------------------------- lease
 
-  private def leasePath(store: String) =
-    new org.apache.hadoop.fs.Path(s"$store/$LeaseFile")
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  // Arbiter keys are AUTHORITY-QUALIFIED ([[CommitArbiter.storeKey]]:
-  // scheme://authority/path) so same-path stores in different buckets
-  // can share one arbiter table without colliding — a path-only key
-  // would let s3a://bucket-a/x's retake compare-and-delete
-  // s3a://bucket-b/x's LIVE lease. Same hazard class the storeDigests
-  // registry's [[StoreKey]] documents.
-  private def leaseKey(store: String): String =
-    s"lease:${CommitArbiter.storeKey(store)}"
+  /** The arbiter every lease and claim of `store` goes through: the
+    * external one when registered or configured, else the store's own
+    * [[FsArbiter]]. One protocol, whichever answers. */
+  private def arbiterOf(spark: SparkSession, store: String): CommitArbiter =
+    CommitArbiter.forStore(spark, store).getOrElse(FsArbiter(spark, store))
+
   private def snapClaimKey(store: String, snap: Long): String =
-    s"snap:${CommitArbiter.storeKey(store)}:${snapName(snap)}"
+    CommitArbiter.claimKey(store, snapName(snap))
 
-  /** Create-exclusive writer lease. A held lease from a DIFFERENT owner
-    * refuses the commit loudly at start; the same owner (a retrying
-    * batch) re-takes its own lease.
-    *
-    * Only "the lease file already exists" means HELD — any other I/O
-    * failure (permissions, disk full, the store path is a file) is a
-    * real error and rethrown as itself, never disguised as a
-    * "write-leased by '<unreadable>'" refusal. Exclusivity is as atomic
-    * as the filesystem's create-no-overwrite: object stores and HDFS
-    * give a true atomic create; Hadoop's LocalFileSystem is
-    * check-then-create, so on local disk the lease narrows the
-    * interleaving window rather than closing it — the witness-rename
-    * commit point (one atomic rename) is what ultimately refuses a
-    * racing commit even there. */
+  /** Take the writer lease: one conditional put. A held lease from a
+    * DIFFERENT owner refuses the commit loudly at start; the same owner
+    * (a retrying batch) re-takes its own lease, replacing the record
+    * with a fresh nonce via compare-and-delete + re-claim — losing
+    * EITHER half of that pair means another acquisition raced in:
+    * refuse, don't interleave. With an external arbiter the lease is
+    * truly atomic and serializes commits end-to-end; with the store's
+    * [[FsArbiter]] on Hadoop's LocalFileSystem, create-exclusive is
+    * check-then-create, so the lease narrows the interleaving window
+    * rather than closing it — the post-claim lease fence and the
+    * witness-rename commit point (see [[commit]]) refuse a writer that
+    * slipped past it. */
   private[ops] def acquireLease(spark: SparkSession, store: String, owner: String): Unit = {
-    CommitArbiter.forStore(spark, store) match {
-      case Some(arb) => return acquireLeaseArbiter(spark, arb, store, owner)
-      case None => ()
-    }
-    val filesystem = fs(spark, store)
-    filesystem.mkdirs(new org.apache.hadoop.fs.Path(store))
-    val p = leasePath(store)
+    val arb = arbiterOf(spark, store)
+    val key = CommitArbiter.leaseKey(store)
     val body = newLeaseBody(owner)
     def recordBody(): Unit =
       leaseBodies.set(leaseBodies.get + (CommitArbiter.storeKey(store) -> body))
-    val created =
-      try {
-        val os = filesystem.create(p, false)
-        try os.write(body.getBytes("UTF-8")) finally os.close()
-        recordBody()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.nio.file.FileAlreadyExistsException => false
-        // raw create-exclusive refusals surface as bare IOException on
-        // some Hadoop filesystems — match the documented message shape,
-        // rethrow everything else (a permissions error is not a lease)
-        case e: java.io.IOException
-            if Option(e.getMessage).exists(_.toLowerCase.contains("already exists")) => false
-      }
-    if (!created) {
-      val heldBody =
-        try {
-          val is = filesystem.open(p)
-          try scala.io.Source.fromInputStream(is, "UTF-8").mkString
-          finally is.close()
-        } catch { case scala.util.control.NonFatal(_) => null }
-      val held = Option(heldBody).map(_.takeWhile(_ != '\n'))
-        .getOrElse("<unreadable>")
-      if (owner.nonEmpty && held == owner) {
-        val os = filesystem.create(p, true)
-        try os.write(body.getBytes("UTF-8")) finally os.close()
-        recordBody()
-      } else throw new StaleStateException(
-        s"state store $store is write-leased by '$held'" +
-          ageClause(Option(heldBody).flatMap(leaseAgeMs)) +
-          " — a concurrent (or crashed) writer; refusing to interleave " +
-          "commits. If the holder is dead, breakLease() explicitly.")
-    }
-  }
-
-  /** Lease record body: owner on line 1 (what refusals report and
-    * same-owner retakes match on), a per-acquisition nonce on line 2 so
-    * [[releaseOwnLease]] can tell THIS acquisition's lease from any
-    * other writer's — including a same-owner retake from another thread
-    * — and the acquisition's epoch millis on line 3, so refusals can
-    * report how STALE the blocking lease is and the arbiter path's TTL
-    * fence ([[acquireLeaseArbiter]]) can decide a holder is dead. */
-  private def newLeaseBody(owner: String): String =
-    owner + "\n" +
-      java.lang.Long.toHexString(nextHex.incrementAndGet()) + "-" +
-      java.lang.Long.toHexString(Thread.currentThread().getId) + "\n" +
-      System.currentTimeMillis()
-
-  /** Age of a lease record from its line-3 acquisition timestamp; None
-    * for pre-timestamp records (they refuse exactly as before). */
-  private def leaseAgeMs(body: String): Option[Long] =
-    body.split("\n", 3).lift(2)
-      .flatMap(l => scala.util.Try(l.trim.toLong).toOption)
-      .map(t => math.max(0L, System.currentTimeMillis() - t))
-
-  private def ageClause(age: Option[Long]): String =
-    age.map(a => s" (held for ${a} ms)").getOrElse("")
-
-  /** Arbiter-backed lease: one conditional put claims it, and UNLIKE
-    * the filesystem lease this one is truly atomic — no writer can
-    * slip past it, so the lease alone serializes commits end-to-end
-    * (the witness rename stays as a second, now-unraced, publish
-    * step). Same-owner retake (a retrying committer) replaces the
-    * record with a fresh nonce via compare-and-delete + re-claim;
-    * losing EITHER half of that pair means another acquisition raced
-    * in — refuse, don't interleave. */
-  private def acquireLeaseArbiter(
-      spark: SparkSession, arb: CommitArbiter, store: String, owner: String): Unit = {
-    val body = newLeaseBody(owner)
-    def recordBody(): Unit =
-      leaseBodies.set(leaseBodies.get + (CommitArbiter.storeKey(store) -> body))
-    if (arb.putIfAbsent(leaseKey(store), body)) { recordBody(); return }
-    val current = arb.get(leaseKey(store))
+    if (arb.putIfAbsent(key, body)) { recordBody(); return }
+    val current = arb.get(key)
     // LOST-ACK resolution: the arbiter holds EXACTLY the record this
     // call tried to write — the conditional put landed server-side but
     // its ack was lost, and the transport-level retry saw the condition
@@ -664,11 +591,9 @@ object StandingState {
       // itself lose an ack — a false return with the key now absent (or
       // already re-claimed as ours) still means cleared.
       val cleared = current.exists { c =>
-        arb.deleteIf(leaseKey(store), c) ||
-          arb.get(leaseKey(store)).forall(_ == body)
+        arb.deleteIf(key, c) || arb.get(key).forall(_ == body)
       }
-      if (cleared && (arb.putIfAbsent(leaseKey(store), body) ||
-          arb.get(leaseKey(store)).contains(body))) {
+      if (cleared && (arb.putIfAbsent(key, body) || arb.get(key).contains(body))) {
         recordBody()
         if (!sameOwner) {
           // the seize is breakLease-with-fencing, applied automatically:
@@ -677,8 +602,8 @@ object StandingState {
           // human calling breakLease. The zombie — if it was merely slow,
           // not dead — is refused at ITS commit point by the post-claim
           // lease recheck (see [[commit]]): its lease record is gone.
-          System.err.println(
-            s"[graft] lease for $store held by '$held' exceeded " +
+          log.warn(
+            s"lease for $store held by '$held' exceeded " +
               s"leaseTtlMs=${ttl.get} (age ${age.getOrElse(-1L)} ms); " +
               s"'$owner' seized it with fencing and cleared stale claims")
           clearStaleClaims(spark, arb, store)
@@ -687,14 +612,36 @@ object StandingState {
       }
     }
     throw new StaleStateException(
-      s"state store $store is write-leased by '$held'${ageClause(age)} at " +
-        "the commit arbiter — a concurrent (or crashed) writer; refusing " +
-        "to interleave commits. If the holder is dead, breakLease() " +
-        "explicitly" +
+      s"state store $store is write-leased by '$held'${ageClause(age)} — a " +
+        "concurrent (or crashed) writer; refusing to interleave commits. " +
+        "If the holder is dead, breakLease() explicitly" +
         (if (ttl.isEmpty)
           ", or set spark.graft.state.leaseTtlMs for automatic fenced recovery."
         else "."))
   }
+
+  /** Lease record body: owner on line 1 (what refusals report and
+    * same-owner retakes match on), a per-acquisition nonce on line 2 so
+    * [[releaseOwnLease]] can tell THIS acquisition's lease from any
+    * other writer's — including a same-owner retake from another thread
+    * — and the acquisition's epoch millis on line 3, so refusals can
+    * report how STALE the blocking lease is and the TTL fence
+    * ([[acquireLease]]) can decide a holder is dead. */
+  private def newLeaseBody(owner: String): String =
+    owner + "\n" +
+      java.lang.Long.toHexString(nextHex.incrementAndGet()) + "-" +
+      java.lang.Long.toHexString(Thread.currentThread().getId) + "\n" +
+      System.currentTimeMillis()
+
+  /** Age of a lease record from its line-3 acquisition timestamp; None
+    * for a record without one (it refuses, and never expires). */
+  private def leaseAgeMs(body: String): Option[Long] =
+    body.split("\n", 3).lift(2)
+      .flatMap(l => scala.util.Try(l.trim.toLong).toOption)
+      .map(t => math.max(0L, System.currentTimeMillis() - t))
+
+  private def ageClause(age: Option[Long]): String =
+    age.map(a => s" (held for ${a} ms)").getOrElse("")
 
   /** Delete the snapshot claim(s) a crashed writer can strand: claims
     * are only ever taken for latest+1 AT CLAIM TIME, so after any crash
@@ -710,75 +657,43 @@ object StandingState {
     arb.delete(snapClaimKey(store, latest.map(_ + 1).getOrElse(0L)))
   }
 
-  /** Unconditional lease removal — the [[breakLease]] path only. Scoped
-    * releases go through [[releaseOwnLease]], which refuses to delete a
-    * lease this acquisition no longer owns. */
-  private def releaseLease(spark: SparkSession, store: String): Unit = {
-    fs(spark, store).delete(leasePath(store), false); ()
-  }
-
-  /** Compare-and-delete release: remove the lease file only while it
-    * still carries THIS acquisition's body (owner line + nonce line,
-    * recorded by [[acquireLease]]). On filesystems whose create-exclusive
-    * is check-then-create (Hadoop LocalFileSystem), a racing writer can
-    * slip past the lease and lose at the witness-rename arbiter — an
-    * unconditional delete in its exit path would then remove the
-    * WINNER's live lease and reopen the store to a third writer while
-    * the winner is still mid-commit. The nonce makes each acquisition's
-    * body unique (two same-owner acquisitions differ too), so the loser
-    * reads a body that isn't its own and leaves the file alone. The
-    * read-then-delete is itself a narrow window, not an atomic CAS —
-    * strictly tighter than delete-always, with the rename still the
-    * arbiter of record. */
+  /** Compare-and-delete release: remove the lease only while it still
+    * carries THIS acquisition's body (owner line + nonce line, recorded
+    * by [[acquireLease]]). Where the lease is not truly atomic (the
+    * [[FsArbiter]] on local disk) a racing writer can slip past it and
+    * lose at the commit point — an unconditional delete in its exit path
+    * would then remove the WINNER's live lease and reopen the store to a
+    * third writer while the winner is still mid-commit. The nonce makes
+    * each acquisition's body unique (two same-owner acquisitions differ
+    * too), so the loser sees a body that isn't its own and leaves the
+    * lease alone.
+    *
+    * No recorded body for this acquisition (release on a different
+    * thread than acquire, or a call path outside withLease): skip the
+    * delete rather than guess — deleting here could remove a LIVE
+    * holder's lease, the exact hazard the nonce closes. Unconditional
+    * removal stays breakLease-only. */
   private[ops] def releaseOwnLease(spark: SparkSession, store: String): Unit = {
     val key = CommitArbiter.storeKey(store)
     val mine = leaseBodies.get.get(key)
     leaseBodies.set(leaseBodies.get - key)
-    CommitArbiter.forStore(spark, store) match {
-      case Some(arb) =>
-        // a TRUE compare-and-delete at the arbiter — no read/delete gap
-        mine match {
-          case Some(body) => arb.deleteIf(leaseKey(store), body)
-          case None => System.err.println(
-            s"[graft] releaseOwnLease($store): no recorded lease body " +
-              "for this thread; leaving the arbiter lease for breakLease")
-        }
-        return
-      case None => ()
+    mine match {
+      case Some(body) =>
+        arbiterOf(spark, store).deleteIf(CommitArbiter.leaseKey(store), body); ()
+      case None => log.warn(
+        s"releaseOwnLease($store): no recorded lease body for this thread; " +
+          "leaving the lease for breakLease")
     }
-    val filesystem = fs(spark, store)
-    val p = leasePath(store)
-    val current =
-      try {
-        val is = filesystem.open(p)
-        try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
-      } catch { case scala.util.control.NonFatal(_) => null }
-    // No recorded body for this acquisition (release on a different
-    // thread than acquire, or a call path outside withLease): skip the
-    // delete rather than guess — deleting here could remove a LIVE
-    // holder's lease, the exact hazard the nonce closes. Unconditional
-    // removal stays breakLease-only.
-    if (current != null && mine.contains(current))
-      filesystem.delete(p, false)
-    else if (mine.isEmpty)
-      System.err.println(s"[graft] releaseOwnLease($store): no recorded " +
-        "lease body for this thread; leaving the lease file for breakLease")
-    ()
   }
 
-  /** The exact lease body each of THIS thread's live acquisitions wrote,
-    * keyed by normalized store — what [[releaseOwnLease]] compares
-    * against before deleting. */
+  /** The leases THIS thread holds: the exact body each live acquisition
+    * wrote, keyed by qualified store — what [[releaseOwnLease]] and the
+    * commit fence compare against, and what makes [[withLease]]
+    * reentrant (retention inside a leased compaction, or a commit inside
+    * leased retention, reuses the outer lease instead of deadlocking on
+    * itself or releasing the outer scope's lease early). */
   private val leaseBodies = new ThreadLocal[Map[String, String]] {
     override def initialValue(): Map[String, String] = Map.empty
-  }
-
-  /** Stores whose lease THIS thread already holds — [[withLease]] is
-    * reentrant so retention running inside a leased compaction (or a
-    * commit inside leased retention) reuses the outer lease instead of
-    * deadlocking on itself or releasing the outer scope's lease early. */
-  private val heldLeases = new ThreadLocal[Set[String]] {
-    override def initialValue(): Set[String] = Set.empty
   }
 
   /** Run `f` under the store's writer lease (acquired with `owner`,
@@ -789,37 +704,28 @@ object StandingState {
     * not-yet-referenced partition writes: one of the two fails loudly
     * at lease acquisition instead. */
   private def withLease[T](
-      spark: SparkSession, store: String, owner: String)(f: => T): T = {
-    val key = CommitArbiter.storeKey(store)
-    if (heldLeases.get.contains(key)) f
+      spark: SparkSession, store: String, owner: String)(f: => T): T =
+    if (leaseBodies.get.contains(CommitArbiter.storeKey(store))) f
     else {
       ensureCommitCapable(spark, store) // refuse unsafe stores at open
       acquireLease(spark, store, owner)
-      heldLeases.set(heldLeases.get + key)
-      try f
-      finally {
-        heldLeases.set(heldLeases.get - key)
-        releaseOwnLease(spark, store)
-      }
+      try f finally releaseOwnLease(spark, store)
     }
-  }
 
   /** Explicitly break a crashed writer's lease — loud and manual by
     * design (the lease exists to make concurrent writers fail at start;
     * silently expiring it would reopen the interleaving window; the
     * AUTOMATIC variant is the opt-in `spark.graft.state.leaseTtlMs`
-    * fenced seize in [[acquireLeaseArbiter]]). With an arbiter, also
-    * clears the stale snapshot claim(s) a crashed mid-commit writer can
-    * leave behind — at latest+1 (crashed before its rename) AND at the
-    * current latest (crashed after the rename published but before the
-    * finally-delete released the claim); see [[clearStaleClaims]]. */
-  def breakLease(spark: SparkSession, store: String): Unit =
-    CommitArbiter.forStore(spark, store) match {
-      case Some(arb) =>
-        arb.delete(leaseKey(store))
-        clearStaleClaims(spark, arb, store)
-      case None => releaseLease(spark, store)
-    }
+    * fenced seize in [[acquireLease]]). Also clears the stale snapshot
+    * claim(s) a crashed mid-commit writer can leave behind — at latest+1
+    * (crashed before its rename) AND at the current latest (crashed
+    * after the rename published but before the finally-delete released
+    * the claim); see [[clearStaleClaims]]. */
+  def breakLease(spark: SparkSession, store: String): Unit = {
+    val arb = arbiterOf(spark, store)
+    arb.delete(CommitArbiter.leaseKey(store))
+    clearStaleClaims(spark, arb, store)
+  }
 
   // ------------------------------------------------------------ tables
 
@@ -879,26 +785,30 @@ object StandingState {
       // mixed-schema partitions projects whichever file's footer it
       // sampled, so a column added by a delta is silently invisible (or
       // a retyped column corrupts the scan) depending on file order.
-      // The expected shape comes from the base witness's `#schema=` line
-      // (recorded at every commit since this check existed); a legacy
-      // base without one derives it from one standing data file's footer
-      // (driver-side, one open). A table with no base partitions is a
+      // The standing shape is the base witness's `#schema=` line, which
+      // every commit records; a base table without one cannot be checked
+      // and refuses the append. A table with no base partitions is a
       // table birth — it defines its own shape. Replaces are free by
       // design: bootstrap/compaction/refine DEFINE the standing shape.
       baseWitness.foreach { bw =>
         appends.foreach { t =>
-          val expected: Option[String] = bw.schemas.get(t.name).orElse {
-            partitionDirsOf(bw.files.getOrElse(t.name, Seq.empty)).headOption
-              .map(d => canonicalSchema(spark.read.parquet(s"$store/$d").schema))
-          }
           val got = canonicalSchema(t.df.schema)
-          expected.filter(_ != got).foreach { exp =>
-            throw new StaleStateException(
-              s"schema drift refused for table ${t.name} at $store: the " +
-                s"standing shape is [$exp] but this append carries [$got] — " +
-                "mixed-schema partitions read nondeterministically; migrate " +
-                "via a replace commit (writeTables/compaction) that rewrites " +
-                "every partition under the new shape")
+          bw.schemas.get(t.name) match {
+            case Some(exp) if exp != got =>
+              throw new StaleStateException(
+                s"schema drift refused for table ${t.name} at $store: the " +
+                  s"standing shape is [$exp] but this append carries [$got] — " +
+                  "mixed-schema partitions read nondeterministically; migrate " +
+                  "via a replace commit (writeTables/compaction) that rewrites " +
+                  "every partition under the new shape")
+            case None if bw.files.contains(t.name) =>
+              throw new StaleStateException(
+                s"table ${t.name} at $store has no recorded standing shape " +
+                  s"(no #schema line in ${snapName(base.get)}'s witness), so " +
+                  "this append cannot be checked for schema drift; migrate " +
+                  "via a replace commit (writeTables/compaction), which " +
+                  "records the shape")
+            case _ => ()
           }
         }
       }
@@ -946,7 +856,7 @@ object StandingState {
       // per-table standing shape: written tables record their own
       // DataFrame's shape (the drift check above already proved appends
       // match), inherited-only tables carry the base's recorded line
-      // forward — so one commit on a legacy store upgrades its witness
+      // forward
       val schemaOf: Map[String, String] =
         baseWitness.map(_.schemas).getOrElse(Map.empty) ++
           (appends ++ replaces).map(t => t.name -> canonicalSchema(t.df.schema))
@@ -957,47 +867,45 @@ object StandingState {
         merged.toSeq.sortBy(_._1).flatMap {
           case (t, files) => files.map { case (p, len, mt) => s"$t\t$p\t$len\t$mt" }
         })).mkString("\n")
-      // commit point: witness into a temp dir, then ONE rename. With an
-      // external arbiter (object stores), the snapshot number is first
-      // CLAIMED by conditional put — the rename there is copy+delete
-      // and cannot arbitrate, so the claim is the real commit decision
-      // (a second belt even on atomic filesystems: it refuses the
-      // overlap left by an operator breaking a LIVE writer's lease)
-      val arbiter = CommitArbiter.forStore(spark, store)
-      arbiter.foreach { arb =>
-        val claimBody = s"$owner\n" +
-          java.lang.Long.toHexString(nextHex.incrementAndGet())
-        // lost-ack resolution, same shape as the lease: a record holding
-        // EXACTLY this body means OUR conditional put landed and only
-        // its ack was lost to a transport retry — the claim is held
-        val claimed =
-          arb.putIfAbsent(snapClaimKey(store, newSnap), claimBody) ||
-            arb.get(snapClaimKey(store, newSnap)).contains(claimBody)
-        if (!claimed)
-          throw new StaleStateException(
-            s"snapshot ${snapName(newSnap)} at $store is already claimed " +
-              "at the commit arbiter — a concurrent (or crashed) commit " +
-              "holds it; this fold must re-read the new base (if the " +
-              "holder is dead, breakLease() clears the stale claim)")
-        // FENCE: the lease must still be THIS acquisition's record. A
-        // TTL seize (a new owner recovering past a crashed-looking
-        // writer, acquireLeaseArbiter) lands between our lease
-        // acquisition and this claim — publishing anyway would
-        // interleave with the seizer's commits, the exact overlap the
-        // lease exists to refuse. Release the claim and refuse; the
-        // seizer's own claim/publish proceeds unraced. (The residual
-        // window — seized between this recheck and the rename below —
-        // is bounded by one driver-side witness write; the TTL is the
-        // operator's assertion that no holder is still alive there.)
-        val mine = leaseBodies.get.get(CommitArbiter.storeKey(store))
-        if (!mine.exists(b => arb.get(leaseKey(store)).contains(b))) {
-          arb.delete(snapClaimKey(store, newSnap))
-          throw new StaleStateException(
-            s"writer lease for $store was lost before publishing " +
-              s"${snapName(newSnap)} — seized by a new owner past " +
-              "leaseTtlMs (or broken explicitly); refusing to publish " +
-              "over the new owner's commits")
-        }
+      // commit point: CLAIM the snapshot number by conditional put, then
+      // witness into a temp dir and ONE rename. Where rename is
+      // copy+delete (object stores, behind an external arbiter) the claim
+      // is the real commit decision; on a filesystem with atomic rename
+      // the rename stays the arbiter of record and the claim is a second
+      // belt (it refuses the overlap left by an operator breaking a LIVE
+      // writer's lease)
+      val arb = arbiterOf(spark, store)
+      val claimKey = snapClaimKey(store, newSnap)
+      val claimBody = s"$owner\n" +
+        java.lang.Long.toHexString(nextHex.incrementAndGet())
+      // lost-ack resolution, same shape as the lease: a record holding
+      // EXACTLY this body means OUR conditional put landed and only its
+      // ack was lost to a transport retry — the claim is held
+      val claimed =
+        arb.putIfAbsent(claimKey, claimBody) || arb.get(claimKey).contains(claimBody)
+      if (!claimed)
+        throw new StaleStateException(
+          s"snapshot ${snapName(newSnap)} at $store is already claimed " +
+            "at the commit arbiter — a concurrent (or crashed) commit " +
+            "holds it; this fold must re-read the new base (if the " +
+            "holder is dead, breakLease() clears the stale claim)")
+      // FENCE: the lease must still be THIS acquisition's record. A TTL
+      // seize (a new owner recovering past a crashed-looking writer, see
+      // acquireLease) lands between our lease acquisition and this claim
+      // — publishing anyway would interleave with the seizer's commits,
+      // the exact overlap the lease exists to refuse. Release the claim
+      // and refuse; the seizer's own claim/publish proceeds unraced. (The
+      // residual window — seized between this recheck and the rename
+      // below — is bounded by one driver-side witness write; the TTL is
+      // the operator's assertion that no holder is still alive there.)
+      val mine = leaseBodies.get.get(CommitArbiter.storeKey(store))
+      if (!mine.exists(b => arb.get(CommitArbiter.leaseKey(store)).contains(b))) {
+        arb.delete(claimKey)
+        throw new StaleStateException(
+          s"writer lease for $store was lost before publishing " +
+            s"${snapName(newSnap)} — seized by a new owner past " +
+            "leaseTtlMs (or broken explicitly); refusing to publish " +
+            "over the new owner's commits")
       }
       try {
         val filesystem = fs(spark, store)
@@ -1016,7 +924,7 @@ object StandingState {
         // released once the publish attempt resolves either way, so
         // snapshot numbers reused after rollbackTo re-claim cleanly
         // (only a crash strands one — breakLease clears it)
-        arbiter.foreach(_.delete(snapClaimKey(store, newSnap)))
+        arb.delete(claimKey)
       }
       refreshDigest(spark, store)
       newSnap
@@ -1407,9 +1315,15 @@ object StandingState {
       // 1M-file scale point — guide §5, the driver should do almost no
       // data work). Length+mtime is the same freshness evidence the
       // witness PARSE cache already trusts (a commit adds an entry, a
-      // retention removes one, any rewrite moves len/mtime), so the
-      // digest changes exactly when the body digest would — at the cost
-      // of one getFileStatus per snapshot instead of one full read.
+      // retention removes one), at the cost of one getFileStatus per
+      // snapshot instead of one full read. It shares that cache's
+      // aliasing (see invalidateWitnessCache): a witness REWRITTEN IN
+      // PLACE to the same length within one mtime tick (1 ms on local
+      // disk, 1 s on some stores) keeps its mark, so the digest — and a
+      // cache key versioned by it — does not move. Committed witnesses
+      // are never rewritten in place, so only a write outside the commit
+      // protocol can land there; folding a content hash in instead would
+      // put a body read back on every verified read.
       val marks = snapshots(spark, store).map { s =>
         val p = new org.apache.hadoop.fs.Path(s"$store/${snapName(s)}/$WitnessFile")
         val st = filesystem.getFileStatus(p)
@@ -1502,26 +1416,6 @@ object StandingState {
       Multimodal.perceptualHash(assets)
         .join(Multimodal.dhash(assets), "asset_id"),
       "standing-fp")
-
-  /** One-time migration for manifest stores bootstrapped before the
-    * block-key index existed: when the latest witness holds no
-    * [[FpBlocksTable]], backfill it from the STANDING fingerprints
-    * (one pass over the fingerprint table — the cost night 0 would
-    * have paid) as an ordinary append commit. Idempotent: once the
-    * table exists this is a witness read and nothing else; without it
-    * a pre-index store's next nightly would refuse loudly
-    * ("no table fpblocks") with no migration path. The backfill
-    * carries NO owner token — it must not consume the nightly's
-    * replay-skip slot (a crashed-and-restarted night still finds its
-    * own owner check intact). */
-  private def ensureBlockTable(spark: SparkSession, store: String): Unit = {
-    val snap = latestSnapshot(spark, store)
-    if (!recordedWitness(spark, store, snap).files.contains(FpBlocksTable)) {
-      appendTables(store, Seq(
-        TableSpec(FpBlocksTable, blockRowsOf(readFingerprints(spark, store)), "bk")))
-      ()
-    }
-  }
 
   /** Block-key rows for BOTH perceptual fingerprint families of an
     * asset batch — the rows [[FpBlocksTable]] holds, one per (family,
@@ -1662,7 +1556,6 @@ object StandingState {
       store: String,
       maxPartitions: Int = 64,
       owner: String = ""): Boolean = {
-    ensureBlockTable(spark, store) // pre-index store: one-time backfill
     val snap = latestSnapshot(spark, store)
     val parts = recordedWitness(spark, store, snap).files.map {
       case (t, files) => t -> partitionDirsOf(files).size
@@ -1711,14 +1604,9 @@ object StandingState {
     * without weakening the proof. */
   def ingest(deltaAssets: DataFrame, store: String, owner: String = ""): DataFrame = {
     val spark = deltaAssets.sparkSession
-    val snap0 = latestSnapshot(spark, store)
-    if (owner.nonEmpty && ownerOf(spark, store, snap0) == owner)
-      return readClusters(spark, store) // same-owner replay: already folded
-    // pre-index store: backfill the block-key table BEFORE the fold —
-    // and only after the replay check above, so the backfill's own
-    // append (no owner) can never mask a restarted night's owner token
-    ensureBlockTable(spark, store)
     val snap = latestSnapshot(spark, store)
+    if (owner.nonEmpty && ownerOf(spark, store, snap) == owner)
+      return readClusters(spark, store) // same-owner replay: already folded
     val standingCl = readClusters(spark, store)
     val deltaFp = fingerprint(deltaAssets)
     val deltaBlocks = blockRowsOf(deltaFp)

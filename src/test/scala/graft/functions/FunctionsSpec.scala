@@ -128,6 +128,15 @@ class FunctionsSpec extends AnyFunSuite with Matchers {
       graft.ops.Dedup.sortedIntersectCount(sort_array(col("a")), sort_array(col("b"))).as("x"),
       graft.ops.Dedup.sortedIntersectCount(sort_array(col("b")), sort_array(col("a"))).as("y"))
       .collect().foreach(r => r.getInt(0) shouldBe r.getInt(1))
+    // the long branch would read a null element as 0L: arrays that may
+    // hold nulls are refused at analysis
+    val nullableLongs = spark.range(1).select(
+      array(lit(1L), lit(null).cast("long")).as("a"), array(lit(1L)).as("b"))
+    val refused = intercept[org.apache.spark.sql.AnalysisException] {
+      nullableLongs.select(
+        graft.ops.Dedup.sortedIntersectCount(col("a"), col("b"))).collect()
+    }
+    refused.getMessage should include ("cannot be null")
   }
 
   test("codegen path actually compiles (no fallback to interpreted)") {

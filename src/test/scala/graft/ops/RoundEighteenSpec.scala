@@ -68,6 +68,15 @@ class RoundEighteenSpec extends AnyFunSuite {
     assert(fast.exceptAll(slow).count() === 0L)
     assert(slow.exceptAll(fast).count() === 0L)
     assert(fast.count() > 0L, "the corpus must actually produce pairs")
+    // word tokens under hexTokens = true fail the query instead of
+    // merging distinct tokens into colliding longs
+    val words = docs.select(col("doc_id"),
+      array_distinct(split(col("text"), " ")).as("toks"))
+    val err = intercept[Exception] {
+      Dedup.allPairsJaccardTok(words, "doc_id", 0.5, hexTokens = true).count()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("not 16 lower-case hex")))
     Materialize.clearCache()
   }
 }

@@ -7,15 +7,11 @@ import org.scalatest.matchers.should.Matchers
 
 /** Round-15 pins: byte-order string zone maps (supplementary-plane keys
   * prune losslessly), the no-zone fallback for files whose row groups
-  * lack complete statistics, the compactTables table-coverage refusal,
-  * and the one-time fpblocks backfill for pre-index manifest stores. */
+  * lack complete statistics, and the compactTables table-coverage
+  * refusal. */
 class RoundFifteenSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkFixture.spark
   import spark.implicits._
-
-  private def assets(texts: Seq[(Long, String)]) =
-    Multimodal.assetsFromText(texts.toDF("id", "txt"), "id", "txt")
-      .withColumnRenamed("id", "asset_id")
 
   test("string zone maps compare in UTF-8 byte order: supplementary-plane keys prune losslessly") {
     // The divergence: U+1F600 (GRINNING FACE, UTF-8 F0 9F 98 80) sorts AFTER
@@ -128,50 +124,6 @@ class RoundFifteenSpec extends AnyFunSuite with Matchers {
       Seq(("a", "id"), ("b", "id")), maxPartitions = 0) shouldBe true
     StandingState.readTable(spark, store, "a").count() shouldBe 1L
     StandingState.readTable(spark, store, "b").count() shouldBe 1L
-  }
-
-  test("pre-index manifest store: first nightly backfills fpblocks once, then folds exactly") {
-    // simulate a store bootstrapped before the block-key index existed:
-    // fingerprints + clusters only, committed through the public seam
-    val texts = (1L to 20L).map(i =>
-      i -> s"legacy corpus member $i with its own distinct words " * 2)
-    val base = assets(texts)
-    val store = SparkFixture.tempDir("r15-backfill")
-    val fp = StandingState.fingerprint(base)
-    val pairs = Dedup.hammingPairs64(
-        fp.select(col("asset_id"), col("phash").as("simhash")), "asset_id")
-      .select("id_a", "id_b")
-      .unionByName(Dedup.hammingPairs64(
-          fp.select(col("asset_id"), col("dhash").as("simhash")), "asset_id")
-        .select("id_a", "id_b"))
-      .distinct()
-    val clusters = Cluster.dupClusters(pairs)
-      .select(col("doc_id"), col("cluster"), lit(0L).as("_seq"))
-    StandingState.writeTables(store, Seq(
-      StandingState.TableSpec("fingerprints", fp, "asset_id"),
-      StandingState.TableSpec("clusters", clusters, "doc_id")))
-    // the nightly against the legacy store: backfills the block table
-    // from standing fingerprints, then folds the delta
-    val delta = assets(Seq(
-      101L -> (s"legacy corpus member 7 with its own distinct words " * 2),
-      102L -> "wholly novel content nothing like the base "))
-    val merged = StandingState.ingest(delta, store, owner = "night-1")
-    val clusterOf = merged.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    clusterOf(101L) shouldBe clusterOf(7L) // exact-copy pairs through the backfilled index
-    // the backfilled table covers base + delta (6 block rows per asset)
-    StandingState.readTable(spark, store, "fpblocks").count() shouldBe
-      6L * (20 + 2)
-    // replay of the same night is still skipped (the backfill's
-    // owner-less append did not consume the night's replay token)
-    val snaps = StandingState.snapshots(spark, store)
-    StandingState.ingest(delta, store, owner = "night-1")
-    StandingState.snapshots(spark, store) shouldBe snaps
-    // a second delta takes the normal (already-indexed) path
-    val merged2 = StandingState.ingest(
-      assets(Seq(103L -> ("legacy corpus member 12 with its own distinct words " * 2))),
-      store, owner = "night-2")
-    val c2 = merged2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    c2(103L) shouldBe c2(12L)
   }
 
   test("centroid/code assignment is hash-aggregated (no sort of the N·C stream), ties to lowest cid") {
@@ -446,32 +398,36 @@ class RoundFifteenSpec extends AnyFunSuite with Matchers {
     StandingState.readTable(spark, store, "t").count() shouldBe 3L
   }
 
-  test("legacy witness without #schema lines: drift still refused from a data-file footer") {
-    val store = SparkFixture.tempDir("r15-schemalegacy")
+  test("a witness without #schema lines refuses any append loudly, writing no partition") {
+    val store = SparkFixture.tempDir("r15-schemaless")
     StandingState.writeTables(store, Seq(StandingState.TableSpec(
       "t", Seq(("a", 1L)).toDF("k", "v"), "k")))
-    // simulate a pre-schema-line store: strip the #schema lines from the
-    // witness (and drop the CRC sidecar the raw rewrite invalidates)
+    // a witness no commit writes: strip the #schema lines (and drop the
+    // CRC sidecar the raw rewrite invalidates)
     val witness = new java.io.File(s"$store/snap00000/_WITNESS")
     val stripped = scala.io.Source.fromFile(witness, "UTF-8").getLines()
       .filterNot(_.startsWith("#schema=")).mkString("\n")
     val os = new java.io.FileOutputStream(witness)
     try os.write(stripped.getBytes("UTF-8")) finally os.close()
     new java.io.File(s"$store/snap00000/._WITNESS.crc").delete()
-    // drift is still refused — the expected shape derives from one
-    // standing data file's footer
-    intercept[StandingState.StaleStateException] {
+    val partitions = new java.io.File(s"$store/data/t").list().toSet
+    // with no standing shape on record the drift check cannot run, so
+    // even an append of the data's own shape refuses, naming the migration
+    val e = intercept[StandingState.StaleStateException] {
       StandingState.appendTables(store, Seq(StandingState.TableSpec(
-        "t", Seq(("b", 2L, 0.5)).toDF("k", "v", "extra"), "k")))
-    }.getMessage should include("schema drift refused")
-    // a matching append lands, and its commit UPGRADES the witness:
-    // the new snapshot records the #schema line
+        "t", Seq(("b", 2L)).toDF("k", "v"), "k")))
+    }
+    e.getMessage should include("#schema")
+    e.getMessage should include("replace commit")
+    // refused before any data was written
+    new java.io.File(s"$store/data/t").list().toSet shouldBe partitions
+    StandingState.snapshots(spark, store) shouldBe Seq(0L)
+    // the migration: a replace commit records the shape, appends land again
+    StandingState.writeTables(store, Seq(StandingState.TableSpec(
+      "t", StandingState.readTable(spark, store, "t"), "k")), expectedBase = Some(0L))
     StandingState.appendTables(store, Seq(StandingState.TableSpec(
       "t", Seq(("b", 2L)).toDF("k", "v"), "k")))
     StandingState.readTable(spark, store, "t").count() shouldBe 2L
-    val upgraded = scala.io.Source.fromFile(
-      new java.io.File(s"$store/snap00001/_WITNESS"), "UTF-8").mkString
-    upgraded should include("#schema=t\t")
   }
 
   test("snapshot tags survive bounded retention; explicit deletion refuses a pin") {

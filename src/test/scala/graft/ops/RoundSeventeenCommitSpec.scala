@@ -87,6 +87,20 @@ class RoundSeventeenCommitSpec extends AnyFunSuite with Matchers with BeforeAndA
   private def spec(name: String, rows: Seq[(String, Long)]) =
     StandingState.TableSpec(name, rows.toDF("k", "v"), "k")
 
+  /** Runs `f` on the two store shapes crashed-writer recovery must hold
+    * on: an object-store-shaped store behind a registered in-memory
+    * arbiter, and a plain local-disk store whose lease and claims live
+    * in its own [[FsArbiter]] (same keys, files in the store root). */
+  private def onBothArbiters(prefix: String)(f: (String, CommitArbiter) => Unit): Unit = {
+    val naf = nafStore(prefix)
+    val mem = InMemoryArbiter.named(prefix)
+    CommitArbiter.register(naf, mem)
+    try withClue(s"$naf: ")(f(naf, mem))
+    finally CommitArbiter.unregister(naf)
+    val local = SparkFixture.tempDir(prefix + "-local")
+    withClue(s"$local: ")(f(local, FsArbiter(spark, local)))
+  }
+
   // ------------------------------------------------- key qualification
 
   test("storeKey carries scheme+authority: same-path buckets never alias, local respellings do") {
@@ -246,10 +260,7 @@ class RoundSeventeenCommitSpec extends AnyFunSuite with Matchers with BeforeAndA
   // ------------------------------------------------ TTL fenced recovery
 
   test("crashed-writer recovery: TTL-expired lease is seized with fencing, stale claims cleared, no human involved") {
-    val store = nafStore("r17-ttl")
-    val arb = InMemoryArbiter.named("r17-ttl")
-    CommitArbiter.register(store, arb)
-    try {
+    onBothArbiters("r17-ttl") { (store, arb) =>
       StandingState.writeTables(store, Seq(spec("t", Seq(("a", 1L)))))
       val q = CommitArbiter.storeKey(store)
       // a writer that died 60 s ago: stale lease + stranded claims at
@@ -277,7 +288,7 @@ class RoundSeventeenCommitSpec extends AnyFunSuite with Matchers with BeforeAndA
       arb.get(s"snap:$q:snap00000") shouldBe None
       arb.get(s"snap:$q:snap00001") shouldBe None
       arb.get(s"snap:$q:snap00002") shouldBe None
-    } finally CommitArbiter.unregister(store)
+    }
   }
 
   test("a live-but-slow zombie whose lease was seized is refused at its commit point, fenced by the lease recheck") {
@@ -327,10 +338,7 @@ class RoundSeventeenCommitSpec extends AnyFunSuite with Matchers with BeforeAndA
   }
 
   test("breakLease clears stranded claims at BOTH the latest snapshot and latest+1") {
-    val store = nafStore("r17-break")
-    val arb = InMemoryArbiter.named("r17-break")
-    CommitArbiter.register(store, arb)
-    try {
+    onBothArbiters("r17-break") { (store, arb) =>
       StandingState.writeTables(store, Seq(spec("t", Seq(("a", 1L)))))
       val q = CommitArbiter.storeKey(store)
       // post-rename crash strands a claim at the LATEST snapshot (0);
@@ -344,7 +352,7 @@ class RoundSeventeenCommitSpec extends AnyFunSuite with Matchers with BeforeAndA
       arb.get(s"snap:$q:snap00001") shouldBe None
       StandingState.appendTables(store, Seq(spec("t", Seq(("b", 2L)))))
       StandingState.readTable(spark, store, "t").count() shouldBe 2L
-    } finally CommitArbiter.unregister(store)
+    }
   }
 
   // -------------------------------------- wire-level throttle semantics
