@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * plan chain — marker rel → source selection → per-source recombination →
   * UNION ALL → overlap cutoff → sort (SURVEY.md §3, lifecycle steps 5-6) —
   * as eager DataFrame construction. Source selection happens here, at
-  * assembly time, from the caller-supplied time predicate; Catalyst then
-  * handles everything the reference needed bespoke rules for (filter
-  * pushdown past the union, partition pruning on `date=`, column pruning).
+  * assembly time, from the caller-supplied time predicate
+  * ([[SourceSet.prune]]); Catalyst then handles filter pushdown past the
+  * union and column pruning. The archive's `date=` directories are not
+  * pruned: no tenant statement bounds `date`.
   */
 object Assembler {
 
@@ -19,8 +20,8 @@ object Assembler {
     *
     * @param timeFilter optional predicate over this metric's columns; its
     *   `timestamp` bounds (extracted with [[TimeRange]]'s conservative
-    *   rules) drive nearline-table pruning; the predicate itself is also
-    *   applied as a normal row filter (residual semantics).
+    *   rules) drive source pruning; the predicate itself is also applied
+    *   as a normal row filter (residual semantics).
     * @param sorted the table contract is time-ordered output
     *   (`FineoRecombinatorRule.java:171-177`); pass false for inner use
     *   where an aggregation on top would destroy order anyway.
@@ -39,14 +40,16 @@ object Assembler {
 
     // Overlap de-duplication by cutoff, not by key (reference R2,
     // `ConvertFineoMarkerIntoFilteredInputTables.java:144-177`): archive
-    // rows whose timestamp falls inside some nearline window [start, end)
-    // are dropped — nearline wins on a timestamp present in both. The
-    // reference cuts everything >= min(start), which silently loses archive
-    // rows falling in a GAP between non-contiguous nearline windows; the
-    // per-window exclusion is identical when windows are contiguous (the
-    // deployed layout) and strictly lossless when they are not. The
-    // predicate is a short OR over window bounds — it pushes to the scan
-    // as plain range filters.
+    // rows whose timestamp falls inside some kept nearline window
+    // [start, end) are dropped — nearline wins on a timestamp present in
+    // both. The reference cuts everything >= min(start), which silently
+    // loses archive rows falling in a GAP between non-contiguous nearline
+    // windows; the per-window exclusion is identical when windows are
+    // contiguous (the deployed layout) and strictly lossless when they are
+    // not. The predicate is a short OR over window bounds — it pushes to
+    // the scan as plain range filters. Because of this cut, `prune` drops
+    // the archive outright when the kept windows cover the whole range;
+    // it reaches this point only for ranges with an uncovered timestamp.
     val cutFsDfs =
       if (pruned.nearline.nonEmpty && fsDfs.nonEmpty) {
         val ts = col(Metric.TimestampField)

@@ -24,10 +24,13 @@ object TimeRange {
     *
     * Mirrors the conservatism of the reference's
     * `TimestampExpressionBuilder` (`fineo-adapter-drill/.../partition/
-    * TimestampExpressionBuilder.java:71-134`): only `=, <, <=, >, >=`
-    * on the given column, combined with AND/OR, narrow the range. Any
-    * construct we don't understand (`<>`, arithmetic, IS NULL, other
-    * columns, …) widens to Full — never narrows. Widening is always safe:
+    * TimestampExpressionBuilder.java:71-134`): only `=, <, <=, >, >=`,
+    * `BETWEEN` and `IN` over integer literals on the given column,
+    * combined with AND/OR, narrow the range. A cast is looked through only
+    * when its target is BIGINT (a narrower cast can wrap a value under
+    * non-ANSI semantics). Any construct we don't understand (`<>`,
+    * `NOT …`, arithmetic, IS NULL, other casts, other columns, …) widens
+    * to Full — never narrows. Widening is always safe:
     * the residual Spark filter still applies row-by-row; this range only
     * drives *source selection* (which tables/directories to read at all).
     *
@@ -43,8 +46,14 @@ object TimeRange {
     case Fn("or", Seq(l, r))  => extract(ts, l).union(extract(ts, r))
     case Fn(op, Seq(Attr(`ts`), LongLit(v))) => fromCompare(op, v, flipped = false)
     case Fn(op, Seq(LongLit(v), Attr(`ts`))) => fromCompare(op, v, flipped = true)
+    case Fn("in", Attr(`ts`) +: vs) => hull(vs.map(LongLit.unapply))
     case _ => Full
   }
+
+  /** Hull of an IN list; Full unless every element is an integer literal. */
+  private def hull(vs: Seq[Option[Long]]): TimeRange =
+    if (vs.isEmpty || vs.exists(_.isEmpty)) Full
+    else TimeRange(vs.flatten.min, vs.flatten.max)
 
   private object LongLit {
     def unapply(p: P): Option[Long] = p match {
@@ -61,24 +70,37 @@ object TimeRange {
   def extractExpr(tsColumn: String, e: org.apache.spark.sql.catalyst.expressions.Expression)
       : TimeRange = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
     val ts = tsColumn.toLowerCase
     def attr(x: Expression): Option[String] = x match {
-      case a: UnresolvedAttribute => Some(a.name.toLowerCase)
-      case a: AttributeReference  => Some(a.name.toLowerCase)
-      case Cast(c, _, _, _)       => attr(c)
+      case a: UnresolvedAttribute  => Some(a.name.toLowerCase)
+      case a: AttributeReference   => Some(a.name.toLowerCase)
+      case Cast(c, LongType, _, _) => attr(c)
       case _ => None
     }
+    // Typed: a DATE or TIMESTAMP literal also carries an Int or Long value,
+    // in days or microseconds, not epoch millis.
     def lit(x: Expression): Option[Long] = x match {
-      case Literal(v: Long, _)  => Some(v)
-      case Literal(v: Int, _)   => Some(v.toLong)
-      case Literal(v: Short, _) => Some(v.toLong)
-      case Cast(c, _, _, _)     => lit(c)
+      case Literal(v: Long, LongType)   => Some(v)
+      case Literal(v: Int, IntegerType) => Some(v.toLong)
+      case Literal(v: Short, ShortType) => Some(v.toLong)
+      case Cast(c, LongType, _, _)      => lit(c)
       case _ => None
     }
+    def isTs(x: Expression): Boolean = attr(x).contains(ts)
     def go(x: Expression): TimeRange = x match {
       case And(l, r) => go(l).intersect(go(r))
       case Or(l, r)  => go(l).union(go(r))
+      // Spark parses `a BETWEEN lo AND hi` to this function, which means
+      // `lo <= a AND a <= hi`; a non-literal bound leaves that side open.
+      case f: UnresolvedFunction if f.nameParts.map(_.toLowerCase) == Seq("between") =>
+        f.arguments match {
+          case Seq(a, lo, hi) if isTs(a) =>
+            TimeRange(lit(lo).getOrElse(Long.MinValue), lit(hi).getOrElse(Long.MaxValue))
+          case _ => Full
+        }
+      case In(a, vs) if isTs(a) => hull(vs.map(lit))
       case cmp: BinaryComparison =>
         val op = cmp match {
           case _: EqualTo => "="
@@ -88,9 +110,9 @@ object TimeRange {
           case _: GreaterThanOrEqual => ">="
           case _ => "?"
         }
-        (attr(cmp.left), lit(cmp.right), attr(cmp.right), lit(cmp.left)) match {
-          case (Some(a), Some(v), _, _) if a == ts => fromCompare(op, v, flipped = false)
-          case (_, _, Some(a), Some(v)) if a == ts => fromCompare(op, v, flipped = true)
+        (lit(cmp.right), lit(cmp.left)) match {
+          case (Some(v), _) if isTs(cmp.left)  => fromCompare(op, v, flipped = false)
+          case (_, Some(v)) if isTs(cmp.right) => fromCompare(op, v, flipped = true)
           case _ => Full
         }
       case _ => Full

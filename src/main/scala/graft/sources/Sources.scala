@@ -6,10 +6,11 @@ import graft.core.TimeRange
   * `basedir/<version>/<format>/<org>/<metricId>/…`
   * (`SubTableScanBuilder.java:106-112`). We diverge from the reference's
   * `Date.toString()` date directories and use Hive-style `date=YYYY-MM-DD`
-  * partition dirs instead, so Spark's native partition pruning replaces the
-  * reference's custom `_fd0` PruneScanRule machinery (SURVEY.md §4 R7) —
-  * at 100 TB this is the difference between listing every file and reading
-  * only matching partitions' footers.
+  * partition dirs instead. Tenant statements bound `timestamp`, never
+  * `date`, and the reference's `_fd0` directory pruning from timestamp
+  * bounds (SURVEY.md §4 R7) is not rebuilt, so a read that keeps the
+  * archive lists and scans all of its date dirs; [[SourceSet.prune]]
+  * drops the archive altogether for ranges the nearline windows cover.
   */
 case class FsSource(format: String, basedir: String) {
   require(format == "json" || format == "parquet", s"unsupported format $format")
@@ -48,11 +49,30 @@ case class SourceSet(
     if (nearline.isEmpty) None else Some(nearline.map(_.startMillis).min)
 
   /** Time-range source pruning (reference R1,
-    * `ConvertFineoMarkerIntoFilteredInputTables.java:183-285`): drop
-    * nearline tables whose window can't contain rows in `range`. FS sources
-    * always stay (their pruning is per-partition-dir, handled natively by
-    * the parquet/json scan). */
+    * `ConvertFineoMarkerIntoFilteredInputTables.java:183-285`), exact for
+    * any sound `range` (every row the statement can see has a timestamp in
+    * it):
+    *  - nearline tables whose window can't contain rows in `range` go;
+    *  - the FS (archive) sources go too when the kept windows together
+    *    cover every timestamp of a non-empty `range`: the assembler's
+    *    cutoff drops every archive row inside a kept window (nearline
+    *    wins), so an archive branch over a covered range yields no row.
+    * A `Full` range keeps everything; an empty one keeps the archive and
+    * no window. The archive's `date=` directories are not pruned from
+    * timestamp bounds. */
   def prune(range: TimeRange): SourceSet =
     if (range.isFull) this
-    else copy(nearline = nearline.filter(_.covers(range)))
+    else {
+      val kept = nearline.filter(_.covers(range))
+      copy(fs = if (covered(range, kept)) Nil else fs, nearline = kept)
+    }
+
+  /** Does the union of the windows' `[start, end)` contain every timestamp
+    * in `range`? One pass over the windows by start, advancing the first
+    * timestamp not yet covered; false for an empty range. */
+  private def covered(range: TimeRange, windows: Seq[NearlineTableDesc]): Boolean =
+    !range.isEmpty && windows.sortBy(_.startMillis).foldLeft(range.min) { (next, w) =>
+      if (next > range.max || w.startMillis > next) next
+      else math.max(next, w.endMillis)
+    } > range.max
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.internal
+import org.apache.spark.sql.types.LongType
 
 /** Spark 4 removed `Column.expr` from the public API (Connect-compatible
   * Column built on `ColumnNode`s). This shim lives in the spark.sql package
@@ -48,7 +49,8 @@ object ColumnExpr {
       Fn(f.functionName.toLowerCase, f.arguments.map(conv))
     case a: internal.UnresolvedAttribute => Attr(a.nameParts.mkString(".").toLowerCase)
     case l: internal.Literal => Lit(l.value)
-    case c: internal.Cast => conv(c.child)
+    // only a BIGINT cast is transparent: a narrower one can wrap a value
+    case c: internal.Cast if c.dataType == LongType => conv(c.child)
     case _ => Opaque
   }
 }

@@ -95,6 +95,52 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
       Seq((60L, 6L), (150L, 15L), (260L, 26L))
   }
 
+  test("covered ranges drop the archive: pruned tables equal the unpruned table in range") {
+    // archive json + parquet rows every 10 ms over [0, 600); nearline
+    // windows [200, 300) and [400, 500) overlap it, with a gap [300, 400)
+    val dir = SparkFixture.tempDir("assy_cover")
+    val archiveRows = (0L until 600L by 10L).map(t => Row("orgid1", "m1", t, true, t))
+    writeArchive(dir, "json", archiveRows.filter(_.getLong(2) % 20 == 0))
+    writeArchive(dir, "parquet", archiveRows.filter(_.getLong(2) % 20 != 0))
+    val nlDir = SparkFixture.tempDir("nl_cover")
+    def nlRows(lo: Long) = (lo until lo + 100L by 25L).map(t =>
+      Row("orgid1m1", t.toString, Seq("w"), Map("w" -> "false"), Map("w" -> (t + 1000).toString)))
+    writeNearline(s"$nlDir/a", nlRows(200L))
+    writeNearline(s"$nlDir/b", nlRows(400L))
+    val sources = SourceSet(
+      fs = Seq(FsSource("json", dir), FsSource("parquet", dir)),
+      nearline = Seq(
+        NearlineTableDesc("t_400_500", s"$nlDir/b", 400L, 500L),
+        NearlineTableDesc("t_200_300", s"$nlDir/a", 200L, 300L)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1).toSeq
+    val unpruned = Assembler.metricTable(spark, "orgid1", metric, sources, sorted = false)
+
+    val cases = Seq( // (min, max, covered)
+      (210L, 289L, true),  // inside one window
+      (250L, 299L, true),  // max = end - 1
+      (250L, 300L, false), // max = end: 300 lies in the gap
+      (250L, 450L, false), // spans the gap
+      (300L, 200L, false)) // empty
+    cases.foreach { case (lo, hi, covered) =>
+      withClue(s"[$lo, $hi]: ") {
+        val pred = col("timestamp") >= lo && col("timestamp") <= hi
+        val range = TimeRange.extract("timestamp", pred)
+        range shouldBe TimeRange(lo, hi)
+        val pruned = sources.prune(range)
+        pruned.fs.isEmpty shouldBe covered
+        val table = Assembler.metricTable(spark, "orgid1", metric, pruned, sorted = false)
+        val got = rows(table.filter(pred))
+        got shouldBe rows(unpruned.filter(pred))
+        if (lo <= hi) got should not be empty
+        if (covered) {
+          table.inputFiles.exists(_.contains(dir)) shouldBe false
+          got.map(_._2).forall(_ >= 1000L) shouldBe true // nearline values only
+        }
+      }
+    }
+  }
+
   test("nearline multi-write items expand to one row per write-id") {
     val nlPath = SparkFixture.tempDir("nl2") + "/tbl"
     writeNearline(nlPath, Seq(

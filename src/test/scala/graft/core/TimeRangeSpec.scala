@@ -7,7 +7,8 @@ import org.scalatest.matchers.should.Matchers
 
 /** Mirrors the conservatism contract of the reference's
   * TimestampExpressionBuilder (TimestampExpressionBuilder.java:71-134):
-  * only =,<,<=,>,>= + AND/OR narrow; everything else widens to scan-all. */
+  * only =,<,<=,>,>=, BETWEEN, IN + AND/OR narrow; everything else widens
+  * to scan-all. */
 class TimeRangeSpec extends AnyFunSuite with Matchers {
   SparkFixture.spark // force session init for Column->Expression conversion
 
@@ -41,6 +42,40 @@ class TimeRangeSpec extends AnyFunSuite with Matchers {
     TimeRange.extract(ts, (col(ts) > 100L) || col("other") === 1L) shouldBe TimeRange.Full
     // AND with an opaque side keeps the understood side only
     TimeRange.extract(ts, (col(ts) > 100L) && col("other") === 1L) shouldBe TimeRange(min = 101)
+  }
+
+  private def sqlRange(pred: String): TimeRange =
+    TimeRange.extractExpr(ts,
+      org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(pred))
+
+  test("casts are looked through only when they target BIGINT") {
+    // with ANSI off, ts = 2^32 + 100 satisfies CAST(ts AS INT) < 400 (wraps
+    // to 100), and CAST(300000 AS SMALLINT) is -27680: neither may narrow
+    sqlRange("CAST(`timestamp` AS INT) < 400") shouldBe TimeRange.Full
+    sqlRange("`timestamp` > CAST(300000 AS SMALLINT)") shouldBe TimeRange.Full
+    sqlRange("CAST(`timestamp` AS INT) BETWEEN 100 AND 200") shouldBe TimeRange.Full
+    sqlRange("CAST(`timestamp` AS BIGINT) < 400") shouldBe TimeRange(max = 399)
+    sqlRange("`timestamp` > CAST(300 AS BIGINT)") shouldBe TimeRange(min = 301)
+    TimeRange.extract(ts, col(ts).cast("int") < 400L) shouldBe TimeRange.Full
+    TimeRange.extract(ts, col(ts) > lit(300000).cast("short")) shouldBe TimeRange.Full
+    TimeRange.extract(ts, col(ts).cast("long") < 400L) shouldBe TimeRange(max = 399)
+    // a DATE or TIMESTAMP literal holds days or microseconds, not millis
+    sqlRange("`timestamp` > DATE '2024-01-01'") shouldBe TimeRange.Full
+    sqlRange("`timestamp` > TIMESTAMP '2024-01-01 00:00:00'") shouldBe TimeRange.Full
+  }
+
+  test("BETWEEN and IN bound the range; NOT BETWEEN and NOT IN stay Full") {
+    sqlRange("`timestamp` BETWEEN 100 AND 200") shouldBe TimeRange(100, 200)
+    sqlRange("timestamp BETWEEN 100 AND 200 AND timestamp < 150") shouldBe TimeRange(100, 149)
+    sqlRange("`timestamp` BETWEEN 100 AND `other`") shouldBe TimeRange(min = 100)
+    sqlRange("`timestamp` IN (300, 100, 200)") shouldBe TimeRange(100, 300)
+    sqlRange("`timestamp` IN (100, `other`)") shouldBe TimeRange.Full
+    sqlRange("`other` BETWEEN 100 AND 200") shouldBe TimeRange.Full
+    sqlRange("`timestamp` NOT BETWEEN 100 AND 200") shouldBe TimeRange.Full
+    sqlRange("`timestamp` NOT IN (100, 200)") shouldBe TimeRange.Full
+    TimeRange.extract(ts, col(ts).between(100L, 200L)) shouldBe TimeRange(100, 200)
+    TimeRange.extract(ts, col(ts).isin(300L, 100L, 200L)) shouldBe TimeRange(100, 300)
+    TimeRange.extract(ts, !col(ts).isin(100L, 200L)) shouldBe TimeRange.Full
   }
 
   test("overlap check against [start, end) windows") {

@@ -139,6 +139,46 @@ class TenantFrontendSpec extends AnyFunSuite with Matchers {
     cteRebound.collect().map(_.getLong(0)).sorted.toSeq shouldBe Seq(1L, 9L)
   }
 
+  test("BETWEEN bounds prune: a covered range reads neither the other window nor the archive") {
+    import org.apache.spark.sql.types.{ArrayType, MapType}
+    val reg = SchemaRegistry(Org("orgb", Seq(
+      Metric("mb", "between_metric", Seq(Field("v", FieldType.LONG))))))
+    val nlDir = SparkFixture.tempDir("between_nl")
+    val nlSchema = StructType(Seq(
+      StructField("partition", StringType), StructField("sort", StringType),
+      StructField("ids", ArrayType(StringType)),
+      StructField("v", MapType(StringType, StringType))))
+    def writeNl(path: String, sort: String, v: String): Unit =
+      spark.createDataFrame(
+        Seq(Row("orgbmb", sort, Seq("w"), Map("w" -> v))).asJava, nlSchema)
+        .write.mode("overwrite").parquet(path)
+    writeNl(s"$nlDir/t1", "100", "1")
+    writeNl(s"$nlDir/t2", "900", "9")
+    // the archive repeats ts=100 (cut: nearline wins) and holds ts=1200
+    val archive = SparkFixture.tempDir("between_fs")
+    spark.createDataFrame(Seq(
+      Row("orgb", "mb", 100L, 100L), Row("orgb", "mb", 1200L, 12L)).asJava,
+      StructType(Seq(
+        StructField("companykey", StringType), StructField("metrictype", StringType),
+        StructField("timestamp", LongType), StructField("v", LongType))))
+      .write.mode("overwrite").parquet(s"$archive/0/parquet/orgb/mb")
+    val srcs = SourceSet(
+      fs = Seq(FsSource("parquet", archive)),
+      nearline = Seq(
+        NearlineTableDesc("t_0_500", s"$nlDir/t1", 0, 500),
+        NearlineTableDesc("t_500_1000", s"$nlDir/t2", 500, 1000)))
+    val t = TenantSession.open(spark, reg, "orgb", srcs)
+
+    val covered = t.sql("SELECT v FROM between_metric WHERE `timestamp` BETWEEN 50 AND 400")
+    covered.collect().map(_.getLong(0)).toSeq shouldBe Seq(1L)
+    covered.inputFiles.exists(_.contains("/t2")) shouldBe false
+    covered.inputFiles.exists(_.contains(archive)) shouldBe false
+
+    val wide = t.sql("SELECT v FROM between_metric WHERE `timestamp` BETWEEN 50 AND 1500")
+    wide.collect().map(_.getLong(0)).sorted.toSeq shouldBe Seq(1L, 9L, 12L)
+    wide.inputFiles.exists(_.contains(archive)) shouldBe true
+  }
+
   test("file-path tables and catalog-qualified names are rejected (isolation escape)") {
     val t = TenantSession.open(spark, registry, "org1", sources)
     // Spark's runSQLOnFiles surface: parquet.`/any/path` must throw, not read
