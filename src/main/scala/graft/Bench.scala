@@ -1,31 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
-/** Per-query physical cost capture: sums task metrics between reset()
-  * calls so every bench timing carries its own diagnosis (a regression
-  * with flat shuffle bytes is scheduling noise; one with 10× shuffle is a
-  * plan change). Task-end events are async — callers drain the listener
-  * bus before snapshotting. */
-private class QueryMetricsListener extends org.apache.spark.scheduler.SparkListener {
-  import java.util.concurrent.atomic.LongAdder
-  val shuffleRead, shuffleWrite, spill, tasks, outBytes = new LongAdder
-  override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-    val m = te.taskMetrics
-    if (m != null) {
-      shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
-      shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-      spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-      // sink-side write volume (parquet index/standing-state commits):
-      // the delta-sized-writes evidence for the nightly fold queries
-      outBytes.add(m.outputMetrics.bytesWritten)
-      tasks.increment()
-    }
-  }
-  def reset(): Unit =
-    Seq(shuffleRead, shuffleWrite, spill, tasks, outBytes).foreach(_.reset())
-  def snapshot: (Long, Long, Long, Long, Long) =
-    (shuffleRead.sum, shuffleWrite.sum, spill.sum, tasks.sum, outBytes.sum)
-}
+import graft.frontend.JsonCodec.jstr
+import org.apache.spark.sql.graftshim.GraftSessions
 
 /** Per-query contention adjudication — the decision logic behind the
   * bench's flag-and-retime gate, pure so the synthetic-contention spec
@@ -76,18 +51,7 @@ private[graft] object BenchGate {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // literal block-key probes (StandingState.ProbeLiteralCap keys)
-      // must reach the parquet reader as an IN filter, not a min/max
-      // range that random hash keys render useless
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
     // Untimed session warmup: scheduler + codegen + parquet reader
@@ -121,9 +85,8 @@ object Bench {
     // A failed query must look like a FAILURE, not a fast timing: record
     // the error per query and surface the count in the headline line.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val qmetrics = new QueryMetricsListener
-    spark.sparkContext.addSparkListener(qmetrics)
-    val physical = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long, Long, Long)]
+    val qmetrics = QueryProfile.attach(spark)
+    val physical = scala.collection.mutable.LinkedHashMap.empty[String, QueryProfile.Snapshot]
     // Ambient-load markers: this box has multi-minute contention windows
     // that have produced phantom 2-10x "regressions" in driver captures
     // since round 5 — every timing now carries the 1-min loadavg and the
@@ -168,7 +131,7 @@ object Bench {
         val (h1, m1, e1) = graft.ops.Materialize.cacheTelemetry
         cacheT(name) = (h1 - h0, m1 - m0, e1 - e0)
         try {
-          org.apache.spark.sql.graftshim.GraftSessions.drainListenerBus(spark)
+          GraftSessions.drainListenerBus(spark)
           physical(name) = qmetrics.snapshot
         } catch { case _: Throwable => () } // metrics are diagnosis, never a bench failure
         (name, sec, ok, l0, l1, j0, j1)
@@ -228,8 +191,6 @@ object Bench {
             f"thr $contThreshold%.1f): $sec%.2f s retimed to $again%.2f s")
         name -> math.min(sec, again)
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap { c => if (c == '"' || c == '\\') s"\\$c" else if (c < ' ') " " else c.toString } + "\""
     // The driver reads the headline line from a bounded tail of the run
     // output (~2000 chars): times are 2-decimal and diagnostics go to
     // stderr + target/, never inline, or the line outgrows the window and
@@ -289,11 +250,12 @@ object Bench {
     }
     val regJson = regressions.map { case (n, p, c) =>
       s"${jstr(n)}:{" + f""""prev":$p%.3f,"cur":$c%.3f}""" }.mkString("{", ",", "}")
-    val pm = physical.map { case (n, (sr, sw, sp, tk, ob)) =>
+    val pm = physical.map { case (n, p) =>
       val (ch, cm, ce) = cacheT.getOrElse(n, (0L, 0L, 0L))
       s"${jstr(n)}:{" +
-        s""""shuffleReadBytes":$sr,"shuffleWriteBytes":$sw,"spillBytes":$sp,"tasks":$tk,""" +
-        s""""outputBytes":$ob,""" +
+        s""""shuffleReadBytes":${p.shuffleReadBytes},"shuffleWriteBytes":${p.shuffleWriteBytes},""" +
+        s""""spillBytes":${p.spillBytes},"tasks":${p.tasks},"outputBytes":${p.outputBytes},""" +
+        s""""jobs":${p.jobs},"sqlExecs":${p.sqlExecs},""" +
         s""""cacheHits":$ch,"cacheMisses":$cm,"cacheEvictions":$ce}"""
     }.mkString("{", ",", "}")
     // Full-precision per-query times ride the diagnostics file so a

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.GraftSessions
 import org.apache.spark.sql.functions._
 
 /** Scale soak of the flagship curation path (minhash-LSH → transitive
@@ -28,16 +29,7 @@ object ScaleSoak {
   def main(args: Array[String]): Unit = {
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the nightly block probes push literal IN(bk) filters (see Bench)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
 
@@ -50,23 +42,24 @@ object ScaleSoak {
         col("lang"), col("source"), col("n_chars"))
     }.reduce(_ unionAll _)
 
-    val spill = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          spill.addAndGet(t.taskMetrics.diskBytesSpilled + t.taskMetrics.memoryBytesSpilled)
-    })
+    val profile = QueryProfile.attach(spark)
+    // task-end events arrive asynchronously: drain before every read, or
+    // spill from a stage's last tasks lands on the next stage (or on none)
+    def spill(): Long = {
+      GraftSessions.drainListenerBus(spark)
+      profile.snapshot.spillBytes
+    }
 
     val stages = scala.collection.mutable.LinkedHashMap[String, Double]()
     val counts = scala.collection.mutable.LinkedHashMap[String, Long]()
     def timed[A](name: String)(f: => A): A = {
-      val s0 = spill.get()
+      val s0 = spill()
       val t0 = System.nanoTime()
       val r = f
       stages(name) = (System.nanoTime() - t0) / 1e9
       // per-stage spill attribution: a nonzero battery-level spill must
       // name its stage or the record can't adjudicate it
-      val ds = spill.get() - s0
+      val ds = spill() - s0
       if (ds > 0) counts(s"spill_$name") = ds
       r
     }
@@ -624,7 +617,7 @@ object ScaleSoak {
     val stagesJson = stages.map { case (k, v) => s""""$k":${f"$v%.2f"}""" }.mkString(",")
     val countsJson = counts.map { case (k, v) => s""""$k":$v""" }.mkString(",")
     println(s"""{"metric":"soak_total","value":${f"$total%.2f"},"unit":"sec","replicas":$replicas,""" +
-      s""""sf":"$sfDir","stages":{$stagesJson},"counts":{$countsJson},"spill_bytes":${spill.get()}}""")
+      s""""sf":"$sfDir","stages":{$stagesJson},"counts":{$countsJson},"spill_bytes":${spill()}}""")
     spark.stop()
   }
 }

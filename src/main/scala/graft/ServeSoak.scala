@@ -3,7 +3,8 @@ package graft
 import graft.frontend._
 import graft.schema._
 import graft.sources._
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.graftshim.GraftSessions
 import org.apache.spark.sql.types._
 
 import java.net.URI
@@ -61,16 +62,10 @@ object ServeSoak {
   def main(args: Array[String]): Unit = {
     val durationSec = args.headOption.map(_.toInt).getOrElse(150)
     val outFile = args.drop(1).headOption.getOrElse("SERVESOAK_r14.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSessions.builder()
       // the product precondition, owned here as a deployment would:
       // FAIR across the per-tenant pools (ServingFairness asserts it)
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import scala.jdk.CollectionConverters._
@@ -196,9 +191,6 @@ object ServeSoak {
         throw new RuntimeException(s"avatica ${r.statusCode()}: ${node.get("errorMessage")}")
       node
     }
-    def jsonStr(x: String): String =
-      "\"" + x.flatMap { c =>
-        if (c == '"' || c == '\\') s"\\$c" else if (c < ' ') " " else c.toString } + "\""
     val nextConn = new AtomicLong(0)
     def avaticaQuery(org: String, sql: String): Int = {
       val cid = s"soak${nextConn.incrementAndGet()}"
@@ -208,7 +200,7 @@ object ServeSoak {
           .get("statementId").asInt()
         val res = avaticaRpc(
           s"""{"request":"prepareAndExecute","connectionId":"$cid","statementId":$st,""" +
-            s""""sql":${jsonStr(sql)},"maxRowCount":-1}""")
+            s""""sql":${JsonCodec.jstr(sql)},"maxRowCount":-1}""")
         res.at("/results/0/firstFrame/rows").size()
       } finally avaticaRpc(s"""{"request":"closeConnection","connectionId":"$cid"}""")
     }

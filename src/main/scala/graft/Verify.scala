@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.frontend.JsonCodec.jstr
+import org.apache.spark.sql.graftshim.GraftSessions
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +10,7 @@ object Verify {
     // optional 3rd+ args: restrict to named queries (local iteration only;
     // the driver always passes exactly two args → full battery)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // literal block-key probes (StandingState.ProbeLiteralCap keys)
-      // must reach the parquet reader as an IN filter, not a min/max
-      // range that random hash keys render useless
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
@@ -35,22 +25,18 @@ object Verify {
       // terminal action done — reclaim this query's materialized indexes
       finally graft.ops.Materialize.dropAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(s"$outDir/oracle_sql.json")
     graft.ops.Materialize.clearCache()
     spark.stop()
+  }
+
+  /** Write `SparkEntry.oracleSql` as one JSON object (key → DuckDB SQL).
+    * Every control character is escaped: a tab or CR in hand-written SQL
+    * would otherwise make the DuckDB compare's json.load fail and zero
+    * every correctness result at once. */
+  def writeOracleSql(file: String): Unit = {
+    val json = SparkEntry.oracleSql
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(file), json)
   }
 }

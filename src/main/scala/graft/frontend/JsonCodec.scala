@@ -5,9 +5,12 @@ import org.apache.spark.sql.Row
 /** Minimal JSON value encoding shared by the HTTP serving layers
   * (REST proxy analog + Avatica endpoint): Spark row values to JSON
   * scalars/arrays/objects, with NaN/Infinity as strings (JSON has no
-  * representation) and binary as base64. */
-private[frontend] object JsonCodec {
+  * representation) and binary as base64. [[jstr]] is also the one string
+  * escaper of the bench, soak and oracle records. */
+private[graft] object JsonCodec {
 
+  /** A JSON string literal: quote, backslash and every control character
+    * (< 0x20) escaped, so the output always parses. */
   def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"'  => "\\\""
@@ -19,7 +22,7 @@ private[frontend] object JsonCodec {
       case c => c.toString
     } + "\""
 
-  def jval(v: Any): String = v match {
+  private[frontend] def jval(v: Any): String = v match {
     case null                   => "null"
     case s: String              => jstr(s)
     case b: Boolean             => b.toString

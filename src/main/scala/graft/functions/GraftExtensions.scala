@@ -17,7 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   *
   * Wire up with:
   * {{{
-  *   SparkSession.builder().withExtensions(GraftExtensions.inject) ...
+  *   GraftSessions.builder().withExtensions(GraftExtensions.inject) ...
   * }}}
   * or `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */

@@ -113,9 +113,6 @@ object Materialize {
   private val missCount = new java.util.concurrent.atomic.AtomicLong(0)
   private val evictCount = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** (hits, misses) of the content-addressed cache since JVM start. */
-  def cacheStats: (Long, Long) = (hitCount.get(), missCount.get())
-
   /** (hits, misses, LRU evictions) since JVM start — the bench records
     * per-query DELTAS of this so a silent cache-share loss (an eviction
     * between two queries that build the same index) is visible in the

@@ -3,7 +3,8 @@ package org.apache.spark.sql.graftshim
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 
-/** Session construction hooks that need `private[sql]` access.
+/** Session construction: the one builder every graft main starts from,
+  * and the hooks that need `private[sql]` access.
   *
   * `SparkSession.builder().withExtensions(...)` only applies extensions to
   * a NEW SparkContext's first session — `getOrCreate` on a live context
@@ -14,6 +15,32 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
   * SharedState (so cached data and the global temp view namespace stay
   * one engine) while carrying its private extensions. */
 object GraftSessions {
+
+  /** The local session builder every graft main (and the test fixture)
+    * starts from, carrying the settings the engine depends on:
+    *  - `local[n]` with n from `SPARK_GRAFT_CPUS` (default 32), and as
+    *    many shuffle partitions;
+    *  - UTC session time zone, so time bucketing agrees with the oracle;
+    *  - `spark.sql.legacy.parquet.nanosAsLong`: `events.ts` is parquet
+    *    TIMESTAMP(NANOS), unreadable without it (`Tables.load` converts
+    *    the long back to a microsecond timestamp);
+    *  - `spark.sql.parquet.pushdown.inFilterThreshold=1024`: literal
+    *    block-key probes (`StandingState.ProbeLiteralCap` keys) must reach
+    *    the parquet reader as an IN filter, not a min/max range that
+    *    random hash keys render useless;
+    *  - no Spark UI.
+    * Callers add their own settings (the serving soak's FAIR scheduler)
+    * before `getOrCreate()`; a later `master`/`config` overrides these. */
+  def builder(): SparkSession.Builder = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
+      .config("spark.ui.enabled", "false")
+  }
 
   /** Set a STATIC SQL conf so sessions constructed AFTER this call observe
     * it at session-state init. Static SQL confs are merged from

@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftSessions
 
 /** One shared local SparkSession for the whole forked test JVM. */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSessions.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -14,15 +15,8 @@ object SparkFixture {
       // head-block another tenant's point query — must be set at
       // SparkContext creation, hence here on the shared fixture
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // literal block-key probes (StandingState.ProbeLiteralCap keys)
-      // must reach the parquet reader as an IN filter, not a min/max
-      // range that random hash keys render useless
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
       .config("spark.sql.debug.maxToStringFields", "1000")
       .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

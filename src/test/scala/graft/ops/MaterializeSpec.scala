@@ -41,10 +41,10 @@ class MaterializeSpec extends AnyFunSuite with Matchers {
     Materialize.clearCache()
     def build() = Materialize.index(
       spark.range(100).toDF("id").selectExpr("id", "id * 2 AS dbl"), "cc")
-    val (h0, m0) = Materialize.cacheStats
+    val (h0, m0, _) = Materialize.cacheTelemetry
     val a = build()
     val b = build() // separately-built but canonically identical plan
-    val (h1, m1) = Materialize.cacheStats
+    val (h1, m1, _) = Materialize.cacheTelemetry
     (m1 - m0) shouldBe 1
     (h1 - h0) shouldBe 1
     // both scans read the SAME files
@@ -53,7 +53,7 @@ class MaterializeSpec extends AnyFunSuite with Matchers {
     // a logically different computation misses
     val c = Materialize.index(
       spark.range(100).toDF("id").selectExpr("id", "id * 3 AS dbl"), "cc")
-    val (_, m2) = Materialize.cacheStats
+    val (_, m2, _) = Materialize.cacheTelemetry
     (m2 - m1) shouldBe 1
     c.inputFiles.toSet.intersect(a.inputFiles.toSet) shouldBe empty
     Materialize.clearCache()

@@ -344,16 +344,16 @@ class RoundThirteenSpec extends AnyFunSuite with Matchers {
     def fpIndex() = Materialize.index(
       StandingState.readFingerprints(spark, store).select("asset_id", "phash"),
       "r13-bridge-idx")
-    val (h0, m0) = Materialize.cacheStats
+    val (h0, m0, _) = Materialize.cacheTelemetry
     val (s0, w0) = Materialize.bridgeTelemetry
     fpIndex().count()
     val (s1, w1) = Materialize.bridgeTelemetry
-    val (h1, m1) = Materialize.cacheStats
+    val (h1, m1, _) = Materialize.cacheTelemetry
     m1 - m0 shouldBe 1 // first build: a miss, as ever (behavior unchanged)
     w1 - w0 should be > 0L // versioned via the store's witness digest...
     s1 - s0 shouldBe 0L // ...with ZERO per-file getFileStatus calls
     fpIndex().count()
-    val (h2, _) = Materialize.cacheStats
+    val (h2, _, _) = Materialize.cacheTelemetry
     h2 - h1 shouldBe 1 // cache-hit behavior unchanged
     Materialize.dropAll()
   }
