@@ -46,12 +46,29 @@ private[graft] object BenchGate {
           if sec > 0.5 && contendedWindow(l0, l1, j0, j1, thr) => name
     }
   }
+
+  /** The scale factor an sf directory or a record's `sf` field names:
+    * `0.1` for a `…/sf0.1` directory and for a numeric `"sf": 0.1`. */
+  def scaleOf(sf: String): String = {
+    val name = sf.trim.stripSuffix("/").split('/').last
+    "^sf([0-9.]+)$".r.findFirstMatchIn(name).map(_.group(1)).getOrElse(name)
+  }
+
+  /** Was a bench record (its raw text) taken at this scale factor and core
+    * count? Timings at another size or parallelism are no baseline; a
+    * record that names either field nowhere matches nothing. */
+  def sameShape(record: String, sfDir: String, cpus: Int): Boolean = {
+    val sf = "\"sf\"\\s*:\\s*\"?([^\",}\\s]+)".r.findFirstMatchIn(record).map(m => scaleOf(m.group(1)))
+    val cores = "\"cpus\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(record).map(_.group(1).toInt)
+    sf.contains(scaleOf(sfDir)) && cores.contains(cpus)
+  }
 }
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSessions.builder().getOrCreate()
+    val cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
     // Untimed session warmup: scheduler + codegen + parquet reader
@@ -200,8 +217,9 @@ object Bench {
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // Perf-regression gate: compare per-query times against the newest
-    // recorded BENCH_r*.json and shout about >2× slowdowns — a 596×
-    // regression once shipped silently because nothing diffed the rounds.
+    // recorded BENCH_r*.json of the same scale factor and core count and
+    // shout about >2× slowdowns — a 596× regression once shipped silently
+    // because nothing diffed the rounds.
     // Sub-second deltas are skipped (scheduling noise); the driver's exit
     // code is untouched (a slow query is a loud report, not a dead bench).
     //
@@ -213,7 +231,7 @@ object Bench {
     // slowdowns reach the regressions block; cleared ones are recorded
     // with their retime so the record shows why they were dismissed.
     val retimes = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double, Double)]
-    val regressions: Seq[(String, Double, Double)] = previousBench() match {
+    val regressions: Seq[(String, Double, Double)] = previousBench(sfDir, cpus) match {
       case None => Nil
       case Some((file, prev)) =>
         def flagged(p: Double, t: Double): Boolean = t > 2 * p && t - p > 1.0
@@ -301,7 +319,7 @@ object Bench {
         f""""fixturePrepSec":$fixturePrepSec%.2f,""" +
         s""""fixturePrepFailed":$fixturePrepFailed,""" +
         s""""fixturePrepError":${jstr(fixturePrepError)},""" +
-        s""""errors":$errs,"sf":"$sfDir"}"""
+        s""""errors":$errs,"sf":"$sfDir","cpus":$cpus}"""
     try {
       val out = java.nio.file.Paths.get("target/bench_diagnostics.json")
       java.nio.file.Files.createDirectories(out.getParent)
@@ -321,18 +339,20 @@ object Bench {
       graft.ops.Materialize.clearCache()
       spark.stop()
     } finally {
-      println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"failed":${errors.size},"contended":$contended,"fixturePrepFailed":$fixturePrepFailed,"sf":"$sfDir"}""")
+      println(f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"failed":${errors.size},"contended":$contended,"fixturePrepFailed":$fixturePrepFailed,"sf":"$sfDir","cpus":$cpus}""")
       System.out.flush()
     }
   }
 
-  /** Newest committed bench record in the working dir, parsed to per-query
-    * seconds: BENCHDIAG_r<k>.json (the full-precision diagnostics file
-    * committed per round) is preferred over the driver's BENCH_r<k>.json
-    * for the same round (whose timings line may be embedded JSON-escaped
-    * in a "tail" field — unescape before extracting — and may have been
-    * truncated by the tail window). */
-  private def previousBench(): Option[(String, Map[String, Double])] = {
+  /** Newest committed bench record in the working dir taken at this run's
+    * scale factor and core count ([[BenchGate.sameShape]]), parsed to
+    * per-query seconds: BENCHDIAG_r<k>.json (the full-precision
+    * diagnostics file committed per round) is preferred over the headline
+    * record BENCH_r<k>.json for the same round (whose timings line may be
+    * embedded JSON-escaped in a "tail" field — unescape before extracting
+    * — and may have been truncated by the tail window). With no such
+    * record the gate is skipped, and says so on stderr. */
+  private def previousBench(sfDir: String, cpus: Int): Option[(String, Map[String, Double])] = {
     val dir = new java.io.File(".")
     val cand = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.matches("(BENCHDIAG|BENCH)_r\\d+\\.json"))
@@ -340,15 +360,20 @@ object Bench {
         if (f.getName.startsWith("BENCHDIAG")) 1 else 0))
     // Newest-first, falling back past files whose recorded tail lost the
     // queries block (the round-4 file has only queryMetrics fragments).
-    cand.reverseIterator.flatMap { f =>
+    val found = cand.reverseIterator.flatMap { f =>
       val raw = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         .replace("\\\"", "\"")
-      val qblock = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(raw).map(_.group(1))
+      val qblock = Some(raw).filter(BenchGate.sameShape(_, sfDir, cpus))
+        .flatMap("\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(_).map(_.group(1)))
       qblock.map { b =>
         val pair = "\"([A-Za-z0-9_]+)\":([0-9.Ee+-]+)".r
         f.getName -> pair.findAllMatchIn(b)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       }.filter(_._2.nonEmpty)
     }.take(1).toList.headOption
+    if (found.isEmpty)
+      System.err.println(s"[benchgate] no bench record at sf ${BenchGate.scaleOf(sfDir)} " +
+        s"and $cpus cores: regression gate skipped")
+    found
   }
 }

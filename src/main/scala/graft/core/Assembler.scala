@@ -72,6 +72,16 @@ object Assembler {
     if (sorted) filtered.orderBy(Metric.TimestampField) else filtered
   }
 
+  /** Does `dir` exist on its own filesystem? Asked of Hadoop's
+    * `FileSystem`, not `java.io.File`, which takes a URI-spelled path
+    * (`file:/…`, `s3a://…`) for a local file name and calls it missing.
+    * Only a missing path is false; any other I/O error (no filesystem for
+    * the scheme, denied access) propagates. */
+  def dirExists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
   /** Read + recombine one FS source for a metric. Returns None when the
     * metric's directory doesn't exist in this source (a metric need not be
     * present in every archive generation). */
@@ -81,7 +91,7 @@ object Assembler {
       orgId: String,
       metric: Metric): Option[DataFrame] = {
     val path = src.metricPath(orgId, metric.canonicalId)
-    if (!new java.io.File(path).exists) return None
+    if (!dirExists(spark, path)) return None
     val raw = src.format match {
       // Non-radio metrics read JSON with the registry-derived schema — no
       // inference pass (a full extra read of every file at scale). Radio

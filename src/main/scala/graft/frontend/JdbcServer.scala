@@ -4,13 +4,12 @@ import graft.core.Assembler
 import graft.schema.SchemaRegistry
 import graft.sources.SourceSet
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSessions
 import org.apache.spark.sql.hive.graftshim.ThriftShim
 
-/** Standard-JDBC wire compatibility: a per-tenant HiveServer2 (Thrift)
-  * endpoint any stock JDBC client can connect to — the production entry
-  * point the reference serves with Avatica
+/** Standard-JDBC wire compatibility: ONE HiveServer2 (Thrift) endpoint
+  * any stock JDBC client can connect to, serving every tenant — the
+  * production entry point the reference serves with Avatica
   * (`readerator/server/.../FineoServer.java:49-66`, `FineoJdbcMeta`), here
   * rebuilt on Spark's own Thrift frontend so the wire protocol comes with
   * the engine instead of a bespoke shim.
@@ -18,26 +17,25 @@ import org.apache.spark.sql.hive.graftshim.ThriftShim
   * Tenancy + isolation model (mirrors the reference server, which also
   * binds the API key server-side and forks the grammar to strip writes):
   *
-  *   - the endpoint is opened FOR one validated tenant; its session's
-  *     catalog carries exactly that tenant's metric tables (assembled
-  *     views over the tenant's sources) and errors view — there is
-  *     nothing else to name;
-  *   - the session's parser is [[ReadOnlyParser]] (injected via session
-  *     extensions), so every statement any JDBC client sends — DDL, DML,
-  *     `LOAD DATA`, `SET`, comment-disguised writes — is rejected at
-  *     parse time, exactly like the reference's grammar surgery;
-  *   - `spark.sql.runSQLOnFiles=false` as defense-in-depth against
-  *     path-based table refs.
+  *   - each connection is bound to ONE validated tenant, as a
+  *     [[TenantSession]] over the connection's own session — the same
+  *     binding (org check, `runSQLOnFiles=false`, engine functions, errors
+  *     view) [[TenantSession.open]] gives the Avatica and HTTP wires;
+  *   - every session's parser is the [[WireQueryRewriter]] (injected via
+  *     session extensions), so every statement any JDBC client sends —
+  *     DDL, DML, `LOAD DATA`, `SET`, comment-disguised or EXPLAIN-wrapped
+  *     writes — is rejected at parse time by the same read-only check as
+  *     [[TenantSession]], exactly like the reference's grammar surgery, and
+  *     a connection with no tenant is refused every statement.
   *
   * Scale model (the two defects the r5 verdict flagged, both closed):
   *
-  *   - **statement-local nearline time pruning**: the session's parser
-  *     chain ends in [[WireQueryRewriter]], which splices every bare
-  *     metric name with a freshly assembled plan pruned by the
-  *     statement's own timestamp bounds — the same [[Substitution]]
-  *     mechanism (and the same reference rule, R1) as the HTTP/session
-  *     path. The registered views remain only as the metadata surface
-  *     (SHOW TABLES, DatabaseMetaData);
+  *   - **statement-local nearline time pruning**: the
+  *     [[WireQueryRewriter]] splices every bare metric name with a freshly
+  *     assembled plan pruned by the statement's own timestamp bounds — the
+  *     same [[Substitution]] mechanism (and the same reference rule, R1)
+  *     as the HTTP/session path. The registered views remain only as the
+  *     metadata surface (SHOW TABLES, DatabaseMetaData);
   *   - **bounded result memory**: `spark.sql.thriftServer.
   *     incrementalCollect` is set on the serving session, so Spark's
   *     Thrift frontend streams result partitions through the driver
@@ -57,85 +55,6 @@ class GraftJdbcServer private (
 
 object GraftJdbcServer {
 
-  def start(
-      root: SparkSession,
-      registry: SchemaRegistry,
-      orgId: String,
-      sources: SourceSet,
-      errorsDir: Option[String] = None,
-      port: Int = 0,
-      maxRows: Option[Int] = None,
-      metrics: ServingMetrics = new ServingMetrics): GraftJdbcServer = {
-    ServingFairness.ensureFair(root, "GraftJdbcServer.start", metrics)
-    registry.org(orgId).getOrElse(
-      throw new SecurityException(s"unknown tenant: $orgId"))
-    // All connections must share the serving session (views + read-only
-    // parser); the default per-connection newSession() would see an empty
-    // catalog. The flag is a STATIC SQL conf, so it has to sit on the
-    // SparkConf before the serving session's state initializes — it only
-    // affects Thrift connection handling, nothing else reads it.
-    GraftSessions.setStaticConf(root, "spark.sql.hive.thriftServer.singleSession", "true")
-    // Isolation invariant: the serving session shares SharedState (and so
-    // the global-temp namespace and external catalog) with `root`. Tenant
-    // visibility is exactly the session views registered below, enforced
-    // two ways: the parser refuses qualified escapes into shared
-    // namespaces, and persistent catalog tables must not exist at all —
-    // this endpoint is for serving, not for a host app that also keeps
-    // warehouse tables on the same context.
-    val catalogTables = root.sessionState.catalog.externalCatalog
-      .listDatabases().flatMap(db =>
-        root.sessionState.catalog.externalCatalog.listTables(db))
-    require(catalogTables.isEmpty,
-      s"serving context must have an empty external catalog; found: ${catalogTables.take(5).mkString(", ")}")
-    // Parser chain: read-only + namespace gates first, then the wire
-    // rewriter (per-statement pruning + clamp). The tenant context is
-    // installed AFTER construction — the parser is built during
-    // session-state init, before the session object exists.
-    val ctxRef = new java.util.concurrent.atomic.AtomicReference[Option[WireTenantContext]](None)
-    val serving = GraftSessions.withWrappedParser(root,
-      delegate => new WireQueryRewriter(
-        new ReadOnlyParser(delegate, blockedNamespaces = Set("global_temp", "spark_catalog")),
-        () => ctxRef.get, metrics = Some(metrics)))
-    serving.conf.set("spark.sql.runSQLOnFiles", "false")
-    // Per-tenant FAIR pool: Spark's Thrift operation reads this session
-    // conf and submits the statement's jobs under the named pool — with
-    // spark.scheduler.mode=FAIR on the context, this tenant's endpoint
-    // shares task slots fairly with every other tenant's.
-    serving.conf.set("spark.sql.thriftserver.scheduler.pool", s"tenant_$orgId")
-    // Stream result partitions through the driver instead of collect():
-    // the Thrift operation pulls rows via toLocalIterator under this conf,
-    // so driver memory is bounded by one partition, not the result.
-    serving.conf.set("spark.sql.thriftServer.incrementalCollect", "true")
-    graft.functions.GraftExtensions.register(serving)
-
-    // The tenant's visible tables, as session views over assembled sources.
-    // Queries never resolve through these (the parser substitutes pruned
-    // plans first) — they are the METADATA surface: SHOW TABLES,
-    // DatabaseMetaData.getTables/getColumns list session views.
-    registry.listTables(orgId).foreach { t =>
-      registry.metric(orgId, t).foreach { m =>
-        Assembler.metricTable(serving, orgId, m, sources, sorted = false)
-          .createOrReplaceTempView(t)
-      }
-    }
-    var views = Set.empty[String]
-    errorsDir.filter(d => new java.io.File(d).exists).foreach { dir =>
-      serving.read.json(s"$dir/stream").filter(col("apikey") === orgId)
-        .createOrReplaceTempView("errors_stream")
-      views += "errors_stream"
-    }
-    ctxRef.set(Some(WireTenantContext(serving, orgId, registry, sources, views, maxRows)))
-
-    val p = if (port == 0) freePort() else port
-    serving.conf.set("hive.server2.thrift.port", p.toString)
-    serving.conf.set("hive.server2.thrift.bind.host", "localhost")
-    serving.conf.set("hive.server2.authentication", "NOSASL")
-    serving.conf.set("hive.server2.transport.mode", "binary")
-    val srv = ThriftShim.start(serving)
-    awaitPort(p)
-    new GraftJdbcServer(srv, serving, p, metrics)
-  }
-
   /** Session conf carrying the tenant API key on a multi-tenant endpoint.
     * A stock client supplies it in the JDBC URL's hive-conf list:
     * `jdbc:hive2://host:port/default;auth=noSasl?graft.apikey=KEY` —
@@ -148,17 +67,17 @@ object GraftJdbcServer {
   /** ONE Thrift endpoint serving EVERY tenant, tenant resolved
     * per-connection — the reference's actual topology (`FineoServer` is a
     * single Avatica server; `FineoJdbcMeta` scopes each connection by its
-    * org key) where [[start]] binds one tenant per port.
+    * org key).
     *
     * Mechanics: the server runs WITHOUT `singleSession`, so Spark's
     * Thrift frontend gives every connection its own `newSession()` clone.
     * Those clones inherit the serving session's EXTENSIONS (the
-    * read-only + rewriter parser chain) but start with an empty catalog
-    * and default confs. At the connection's first parsed statement, the
+    * [[WireQueryRewriter]] parser) but start with an empty catalog and
+    * default confs. At the connection's first parsed statement, the
     * rewriter resolves the session's [[TenantConfKey]] conf — applied at
-    * open from the client's URL conf list — validates it against the
-    * registry, hardens the session (runSQLOnFiles off, incremental
-    * collect on), and registers exactly that tenant's metric views. A
+    * open from the client's URL conf list — binds a [[TenantSession]] over
+    * the connection's session (org check, hardening, errors view), and
+    * registers exactly that tenant's metric views. A
     * connection with a missing/unknown key fails its first statement and
     * can name no tables at all (its catalog is empty); it can never see
     * another tenant's views because those live in OTHER connections'
@@ -177,6 +96,9 @@ object GraftJdbcServer {
       maxRows: Option[Int] = None,
       metrics: ServingMetrics = new ServingMetrics): GraftJdbcServer = {
     ServingFairness.ensureFair(root, "GraftJdbcServer.startMultiTenant", metrics)
+    // A STATIC SQL conf, read at session-state init: under a host's
+    // singleSession=true every connection would share the serving session
+    // and so the first connection's tenant.
     GraftSessions.setStaticConf(root, "spark.sql.hive.thriftServer.singleSession", "false")
     val catalogTables = root.sessionState.catalog.externalCatalog
       .listDatabases().flatMap(db =>
@@ -192,19 +114,17 @@ object GraftJdbcServer {
     // statement re-resolves the (already-registered) tenant context.
     val MaxCachedSessions = 512
     val ctxCache = java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[SparkSession, WireTenantContext](64, 0.75f, true) {
+      new java.util.LinkedHashMap[SparkSession, TenantSession](64, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[SparkSession, WireTenantContext]): Boolean =
+            e: java.util.Map.Entry[SparkSession, TenantSession]): Boolean =
           size() > MaxCachedSessions
       })
 
-    def initTenant(sess: SparkSession, orgId: String): WireTenantContext = {
-      registry.org(orgId).getOrElse(
-        throw new SecurityException(s"unknown tenant: $orgId"))
+    def initTenant(sess: SparkSession, orgId: String): TenantSession = {
       // Per-connection hardening: session confs do NOT inherit through
       // newSession(), so re-assert them here (and a client's URL conf
       // list cannot stick — this runs after open, at first parse).
-      sess.conf.set("spark.sql.runSQLOnFiles", "false")
+      // runSQLOnFiles is turned off by the tenant binding below.
       sess.conf.set("spark.sql.thriftServer.incrementalCollect", "true")
       sess.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // per-tenant FAIR pool for this connection's statements (Spark's
@@ -222,23 +142,21 @@ object GraftJdbcServer {
         sess.conf.set(k, root.conf.get(k))
       }
       sess.conf.set("spark.sql.parser.escapedStringLiterals", "false")
-      graft.functions.GraftExtensions.register(sess)
+      val tenant = TenantSession.bind(sess, registry, orgId, sources, errorsDir, maxRows)
+      // The tenant's metric tables as session views: statements never
+      // resolve through them (the rewriter substitutes pruned plans first)
+      // — they are the METADATA surface: SHOW TABLES and
+      // DatabaseMetaData.getTables/getColumns list session views.
       registry.listTables(orgId).foreach { t =>
         registry.metric(orgId, t).foreach { m =>
           Assembler.metricTable(sess, orgId, m, sources, sorted = false)
             .createOrReplaceTempView(t)
         }
       }
-      var views = Set.empty[String]
-      errorsDir.filter(d => new java.io.File(d).exists).foreach { dir =>
-        sess.read.json(s"$dir/stream").filter(col("apikey") === orgId)
-          .createOrReplaceTempView("errors_stream")
-        views += "errors_stream"
-      }
-      WireTenantContext(sess, orgId, registry, sources, views, maxRows)
+      tenant
     }
 
-    def ctxFor(sess: SparkSession): Option[WireTenantContext] =
+    def ctxFor(sess: SparkSession): Option[TenantSession] =
       Option(ctxCache.get(sess)).orElse {
         sess.conf.getOption(TenantConfKey).filter(_.nonEmpty).map { key =>
           ctxCache.synchronized {
@@ -252,10 +170,7 @@ object GraftJdbcServer {
       }
 
     val serving = GraftSessions.withSessionWrappedParser(root, (sess, delegate) =>
-      new WireQueryRewriter(
-        new ReadOnlyParser(delegate, blockedNamespaces = Set("global_temp", "spark_catalog")),
-        () => ctxFor(sess),
-        requireTenant = true, metrics = Some(metrics)))
+      new WireQueryRewriter(delegate, () => ctxFor(sess), metrics))
     serving.conf.set("spark.sql.runSQLOnFiles", "false")
     serving.conf.set("spark.sql.thriftServer.incrementalCollect", "true")
     graft.functions.GraftExtensions.register(serving)

@@ -6,6 +6,7 @@ import graft.sources.SourceSet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan, SubqueryAlias, UnresolvedWith}
+import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.graftshim.ColumnExpr
 
 /** Statement-local tenant relation substitution — the shared mechanism
@@ -23,15 +24,17 @@ import org.apache.spark.sql.graftshim.ColumnExpr
 private[frontend] object Substitution {
 
   /** `collectWithSubqueries` that also descends into `UnresolvedWith` CTE
-    * definitions — cteRelations are not plan children, so the stock
-    * traversal never visits a `WITH` body. */
+    * definitions and the plan under an `EXPLAIN` — cteRelations are not
+    * plan children, and `ExplainCommand` is a leaf, so the stock traversal
+    * never visits a `WITH` body or an explained statement. */
   def deepCollect[A](p: LogicalPlan)(
       pf: PartialFunction[LogicalPlan, A]): Seq[A] = {
     val here = p.collectWithSubqueries(pf)
-    val cteBodies = p.collectWithSubqueries {
+    val hidden = p.collectWithSubqueries {
       case w: UnresolvedWith => w.cteRelations.map(_._2)
+      case e: ExplainCommand => Seq(e.logicalPlan)
     }.flatten
-    here ++ cteBodies.flatMap(deepCollect(_)(pf))
+    here ++ hidden.flatMap(deepCollect(_)(pf))
   }
 
   /** `transformUpWithSubqueries` that also rewrites CTE definitions. */
@@ -80,9 +83,10 @@ private[frontend] object Substitution {
     * @param strict true → any other relation throws SecurityException
     *   (the TenantSession contract: nothing outside the tenant's registry
     *   is nameable). false → unknown names pass through for the session's
-    *   own resolution to handle (the wire path, where the ReadOnlyParser's
-    *   namespace fence plus an empty catalog already bound what a name can
-    *   reach, and internal/metadata statements must not be broken). */
+    *   own resolution to handle (the wire path, where the
+    *   [[WireQueryRewriter]]'s namespace fence plus an empty catalog
+    *   already bound what a name can reach, and internal/metadata
+    *   statements must not be broken). */
   def substituteMetrics(
       spark: SparkSession,
       orgId: String,

@@ -1,5 +1,6 @@
 package graft.frontend
 
+import graft.core.Assembler
 import graft.schema.SchemaRegistry
 import graft.sources.SourceSet
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -48,9 +49,9 @@ final class StatementClampTimeout(msg: String) extends IllegalStateException(msg
 class TenantSession private (
     val spark: SparkSession,
     val orgId: String,
-    registry: SchemaRegistry,
-    sources: SourceSet,
-    serverMaxRows: Option[Int],
+    private[frontend] val registry: SchemaRegistry,
+    private[frontend] val sources: SourceSet,
+    private[frontend] val serverMaxRows: Option[Int],
     maxConcurrentStatements: Int) {
 
   /** Views registered on this tenant session (errors table, curated
@@ -195,24 +196,9 @@ class TenantSession private (
 
   private def runQuery(statement: String): DataFrame = {
     val parsed = spark.sessionState.sqlParser.parsePlan(statement)
-    rejectNonQuery(parsed)
+    // no command at all: SHOW, DESCRIBE, USE and EXPLAIN are handled above
+    TenantSession.rejectNonQuery(parsed, _ => false)
     ColumnExpr.ofRows(spark, substituteRelations(parsed))
-  }
-
-  /** Read-only surface, decided from the plan: any node that is a command
-    * (DDL, SET, CACHE, EXPLAIN, LOAD, …), an unresolved write statement
-    * (INSERT/UPDATE/DELETE/MERGE parse to `ParsedStatement`s), or a
-    * directory write is rejected — wherever it sits in the tree. */
-  private def rejectNonQuery(plan: LogicalPlan): Unit = {
-    val offender = Substitution.deepCollect(plan) {
-      case c: Command         => c.nodeName
-      case p: ParsedStatement => p.nodeName
-      case d: InsertIntoDir   => d.nodeName
-    }
-    offender.headOption.foreach { n =>
-      throw new UnsupportedOperationException(
-        s"read-only tenant surface: $n statements are not allowed")
-    }
   }
 
   /** Validate every table reference and splice the tenant's assembled
@@ -331,9 +317,9 @@ class TenantSession private (
 
 object TenantSession {
 
-  /** Open a tenant session: validates the org exists (the reference's
-    * `TenantValidator`) and binds an isolated `newSession()` whose table
-    * references resolve statement-locally against the tenant's registry.
+  /** Open a tenant session: an isolated `newSession()` bound to the
+    * tenant ([[bind]]), whose table references resolve statement-locally
+    * against the tenant's registry.
     *
     * @param maxRows server-side row clamp applied to every statement
     *   (reference `FineoJdbcMeta.setMaxRows`). */
@@ -344,10 +330,24 @@ object TenantSession {
       sources: SourceSet,
       errorsDir: Option[String] = None,
       maxRows: Option[Int] = None,
+      maxConcurrentStatements: Int = Int.MaxValue): TenantSession =
+    bind(root.newSession(), registry, orgId, sources, errorsDir, maxRows,
+      maxConcurrentStatements)
+
+  /** The one tenant setup every wire shares: [[open]] binds a fresh
+    * `newSession()`, the Thrift endpoint binds each connection's session.
+    * Validates the org exists (the reference's `TenantValidator`) before
+    * touching the session. */
+  private[frontend] def bind(
+      session: SparkSession,
+      registry: SchemaRegistry,
+      orgId: String,
+      sources: SourceSet,
+      errorsDir: Option[String],
+      maxRows: Option[Int],
       maxConcurrentStatements: Int = Int.MaxValue): TenantSession = {
     registry.org(orgId).getOrElse(
       throw new SecurityException(s"unknown tenant: $orgId"))
-    val session = root.newSession()
     // Defense-in-depth: statement-local substitution already rejects
     // parquet.`/path` relations, but make Spark's file-table resolution
     // impossible on this session too.
@@ -365,11 +365,33 @@ object TenantSession {
     // reference appends `apikey = '<org>'` to every errors query
     // (`FineoErrorWhereForce.java:38-68`); baking it into the view is
     // structurally unbypassable.
-    errorsDir.filter(d => new java.io.File(d).exists).foreach { dir =>
-      val errs = session.read.json(s"$dir/stream").filter(col("apikey") === orgId)
-      errs.createOrReplaceTempView("errors_stream")
-      tenant.registeredViews += "errors_stream"
+    errorsDir.filter(Assembler.dirExists(session, _)).foreach { dir =>
+      tenant.registerView("errors_stream",
+        session.read.json(s"$dir/stream").filter(col("apikey") === orgId))
     }
     tenant
+  }
+
+  /** Read-only surface, decided from the plan: any node that is a command
+    * (DDL, SET, CACHE, LOAD, …) outside `allowed`, an unresolved write
+    * statement (INSERT/UPDATE/DELETE/MERGE parse to `ParsedStatement`s),
+    * or a directory write is rejected — wherever it sits in the tree,
+    * CTE bodies and explained statements included (explaining a write is
+    * still a write).
+    *
+    * @param allowed the metadata commands the caller lets Spark run:
+    *   none for [[TenantSession]], which answers SHOW, DESCRIBE, USE and
+    *   EXPLAIN itself; the listing, USE and EXPLAIN commands on the Thrift
+    *   wire ([[WireQueryRewriter]]). */
+  private[frontend] def rejectNonQuery(plan: LogicalPlan, allowed: Command => Boolean): Unit = {
+    val offender = Substitution.deepCollect(plan) {
+      case c: Command if !allowed(c) => c.nodeName
+      case p: ParsedStatement        => p.nodeName
+      case d: InsertIntoDir          => d.nodeName
+    }
+    offender.headOption.foreach { n =>
+      throw new UnsupportedOperationException(
+        s"read-only tenant surface: $n statements are not allowed")
+    }
   }
 }

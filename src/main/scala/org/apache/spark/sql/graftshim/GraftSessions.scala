@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.parser.ParserInterface
   * a NEW SparkContext's first session — `getOrCreate` on a live context
   * returns the existing session and silently drops them, and
   * `newSession()` copies the parent's extensions verbatim. A serving
-  * endpoint that needs its OWN parser (the read-only JDBC facade) must
+  * endpoint that needs its OWN parser (the Thrift wire's statement gate) must
   * therefore construct the session directly, sharing the SparkContext and
   * SharedState (so cached data and the global temp view namespace stay
   * one engine) while carrying its private extensions. */
@@ -76,21 +76,15 @@ object GraftSessions {
     }
 
   /** A new session over `root`'s SparkContext/SharedState whose parser is
-    * `wrap(delegate)` — every statement the session ever parses, from any
-    * entry point (sql(), Thrift operations), goes through the wrapper.
-    * The 6-arg constructor is Scala-private but public in bytecode;
-    * invoked reflectively (same contract `newSession()` itself uses). */
-  def withWrappedParser(
-      root: SparkSession,
-      wrap: ParserInterface => ParserInterface): SparkSession =
-    withSessionWrappedParser(root, (_, delegate) => wrap(delegate))
-
-  /** Like [[withWrappedParser]], but the wrapper also receives the session
-    * whose parser is being built. Because the injected extensions ride the
-    * session object, `newSession()` CLONES (e.g. the Thrift frontend's
-    * per-connection sessions) re-apply the same builder with THEIR session
-    * — the hook a multi-tenant endpoint needs to scope each connection's
-    * parser to that connection's session state. */
+    * `wrap(session, delegate)` — every statement the session ever parses,
+    * from any entry point (sql(), Thrift operations), goes through the
+    * wrapper. Because the injected extensions ride the session object,
+    * `newSession()` CLONES (e.g. the Thrift frontend's per-connection
+    * sessions) re-apply the same builder with THEIR session — the hook a
+    * multi-tenant endpoint needs to scope each connection's parser to that
+    * connection's session state. The 6-arg constructor is Scala-private but
+    * public in bytecode; invoked reflectively (same contract `newSession()`
+    * itself uses). */
   def withSessionWrappedParser(
       root: SparkSession,
       wrap: (SparkSession, ParserInterface) => ParserInterface): SparkSession = {

@@ -141,6 +141,18 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("a file: basedir and a plain basedir give equal tables") {
+    val dir = SparkFixture.tempDir("assy_uri")
+    writeArchive(dir, "json", Seq(Row("orgid1", "m1", 100L, true, 1L)))
+    writeArchive(dir, "parquet", Seq(Row("orgid1", "m1", 50L, false, 2L)))
+    def table(base: String) = Assembler.metricTable(spark, "orgid1", metric,
+      SourceSet(fs = Seq(FsSource("json", base), FsSource("parquet", base),
+        FsSource("parquet", s"$base/absent")))).collect().toSeq
+    val plain = table(dir)
+    plain.map(_.getLong(0)) shouldBe Seq(50L, 100L)
+    table(s"file:$dir") shouldBe plain
+  }
+
   test("nearline multi-write items expand to one row per write-id") {
     val nlPath = SparkFixture.tempDir("nl2") + "/tbl"
     writeNearline(nlPath, Seq(

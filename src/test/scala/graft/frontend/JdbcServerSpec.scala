@@ -138,7 +138,11 @@ class JdbcServerSpec extends AnyFunSuite with Matchers {
           "WITH q AS (SELECT 1 AS x) INSERT INTO jdbcmetric SELECT x, x FROM q",
           "/* hi */ DELETE FROM jdbcmetric",
           "INSERT OVERWRITE DIRECTORY '/tmp/jdbc_escape' USING parquet SELECT 1",
-          "SET spark.sql.runSQLOnFiles=true")) {
+          "SET spark.sql.runSQLOnFiles=true",
+          "EXPLAIN INSERT INTO jdbcmetric VALUES (50, 5)",
+          "CACHE TABLE jdbcmetric",
+          "LOAD DATA LOCAL INPATH '/etc/hosts' INTO TABLE jdbcmetric",
+          "-- c\nCREATE TABLE x AS SELECT 1")) {
         val e = intercept[java.sql.SQLException] { st.execute(sql) }
         e.getMessage should include("read-only")
       }
@@ -160,6 +164,12 @@ class JdbcServerSpec extends AnyFunSuite with Matchers {
         st.executeQuery("SELECT * FROM global_temp.host_secret")
       }
       e.getMessage should include("not accessible")
+      intercept[java.sql.SQLException] {
+        st.executeQuery("EXPLAIN SELECT * FROM global_temp.host_secret")
+      }
+      intercept[java.sql.SQLException] {
+        st.executeQuery("WITH t AS (SELECT * FROM global_temp.host_secret) SELECT * FROM t")
+      }
       intercept[java.sql.SQLException] {
         st.executeQuery("SELECT * FROM spark_catalog.default.anything")
       }

@@ -72,6 +72,9 @@ class TenantFrontendSpec extends AnyFunSuite with Matchers {
     intercept[UnsupportedOperationException] { t.sql("INSERT INTO metricid1 VALUES (1)") }
     intercept[UnsupportedOperationException] { t.sql("DROP TABLE metricid1") }
     intercept[UnsupportedOperationException] { t.sql("SET spark.x = 1") }
+    intercept[UnsupportedOperationException] {
+      t.sql("LOAD DATA LOCAL INPATH '/etc/hosts' INTO TABLE metricid1")
+    }
   }
 
   test("SHOW TABLES / SHOW SCHEMAS / DESCRIBE are tenant-scoped") {
@@ -190,6 +193,9 @@ class TenantFrontendSpec extends AnyFunSuite with Matchers {
     }
     intercept[SecurityException] {
       t.sql("SELECT * FROM spark_catalog.default.anything")
+    }
+    intercept[SecurityException] {
+      t.sql("SELECT * FROM global_temp.x")
     }
     // ... including inside subquery expressions
     intercept[SecurityException] {
@@ -423,6 +429,17 @@ class TenantFrontendSpec extends AnyFunSuite with Matchers {
     val rows = t.sql("SELECT message, stage FROM errors_stream ORDER BY message").collect()
     rows.map(_.getString(0)).toSeq shouldBe Seq("plain", "zipped") // gz read; org2 filtered
     rows.map(_.get(1).toString).sorted.toSeq shouldBe Seq("raw", "staged")
+  }
+
+  test("a file: errorsDir registers errors_stream") {
+    val errDir = SparkFixture.tempDir("errsuri")
+    val d = new java.io.File(s"$errDir/stream/stage=raw/type=error/year=2016/month=10/day=3")
+    d.mkdirs()
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(d.toString, "archive.json"),
+      """{"apikey":"org1","message":"m1","event":"e1"}""".getBytes)
+    val t = TenantSession.open(spark, registry, "org1", sources, errorsDir = Some(s"file:$errDir"))
+    t.sql("SELECT message FROM errors_stream").collect().map(_.getString(0)).toSeq shouldBe Seq("m1")
   }
 
   test("SHOW TABLES FROM/IN accepts only the tenant schema") {
