@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.schema.Metric
+import graft.schema.{Metric, StorageKind}
 import graft.sources.{FsSource, NearlineStub, SourceSet}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   * assembly time, from the caller-supplied time predicate
   * ([[SourceSet.prune]]); Catalyst then handles filter pushdown past the
   * union and column pruning. The archive's `date=` directories are not
-  * pruned: no tenant statement bounds `date`.
+  * pruned: no tenant statement bounds `date`. Every source of a non-radio
+  * metric is read with the storage schema the registry declares
+  * ([[Metric.storageSchema]]), so building the table starts no Spark job:
+  * the first job is the statement's own.
   */
 object Assembler {
 
@@ -60,8 +63,7 @@ object Assembler {
       } else fsDfs
 
     val nearlineDfs = pruned.nearline.map { desc =>
-      val raw = NearlineStub.readForMetric(
-        spark, desc, orgId, metric.canonicalId, mapper = sources.keyMapper)
+      val raw = NearlineStub.readForMetric(spark, desc, orgId, metric, mapper = sources.keyMapper)
       Recombinator.project(raw, metric, bytesAreBase64 = false)
     }
 
@@ -84,7 +86,11 @@ object Assembler {
 
   /** Read + recombine one FS source for a metric. Returns None when the
     * metric's directory doesn't exist in this source (a metric need not be
-    * present in every archive generation). */
+    * present in every archive generation). Non-radio metrics read with the
+    * registry-derived storage schema of the source's format
+    * ([[Metric.storageSchema]]), so no schema-inference job runs; the
+    * `date=` partition columns are still discovered from the directory
+    * listing. Radio metrics infer: unknown columns are their contract. */
   private def readFs(
       spark: SparkSession,
       src: FsSource,
@@ -92,16 +98,9 @@ object Assembler {
       metric: Metric): Option[DataFrame] = {
     val path = src.metricPath(orgId, metric.canonicalId)
     if (!dirExists(spark, path)) return None
-    val raw = src.format match {
-      // Non-radio metrics read JSON with the registry-derived schema — no
-      // inference pass (a full extra read of every file at scale). Radio
-      // metrics must infer: unknown columns are their contract.
-      case "json" => metric.jsonStorageSchema match {
-        case Some(schema) => spark.read.schema(schema).json(path)
-        case None         => spark.read.json(path)
-      }
-      case "parquet" => spark.read.parquet(path)
-    }
+    val kind = if (src.format == "json") StorageKind.Json else StorageKind.Parquet
+    val raw = metric.storageSchema(kind).fold(spark.read)(spark.read.schema(_))
+      .format(src.format).load(path)
     Some(Recombinator.recombine(raw, orgId, metric, bytesAreBase64 = src.format == "json"))
   }
 }

@@ -25,7 +25,8 @@ object Layout {
 
   /** Rewrite `df` under `outDir` as ~`ceil(rows / targetRowsPerFile)`
     * parquet files, range-clustered and sorted on `clusterCols`.
-    * Returns a scan of the compacted table. */
+    * Returns a scan of the compacted table, read with `df`'s schema (no
+    * schema-inference job; [[zorder]] returns its scan the same way). */
   def compact(
       df: DataFrame,
       outDir: String,
@@ -81,7 +82,7 @@ object Layout {
       } finally
         if (!(mat eq df))
           org.apache.spark.sql.graftshim.GraftSessions.unpersistLocalCheckpoint(mat)
-    (spark.read.parquet(outDir), rows)
+    (spark.read.schema(df.schema).parquet(outDir), rows)
   }
 
   /** A plan that is just a relation read (possibly aliased) — executing it
@@ -160,7 +161,7 @@ object Layout {
           .write.mode(SaveMode.Overwrite).parquet(outDir)
       }
     } finally org.apache.spark.sql.graftshim.GraftSessions.unpersistLocalCheckpoint(mat)
-    spark.read.parquet(outDir)
+    spark.read.schema(df.schema).parquet(outDir)
   }
 
   /** Per-file layout audit of a parquet table: row count and cluster-key

@@ -191,25 +191,28 @@ object Materialize {
     * content-addressed cache on (default), a logically-identical `df`
     * materialized earlier in this JVM is reused instead of rewritten —
     * deterministic operator plans (everything here is md5-seeded, no
-    * rand()) make the reuse exact. */
+    * rand()) make the reuse exact. The scan reads with `df`'s own schema
+    * (a cached dir was written from a plan with the same key, hence the
+    * same schema), so returning it starts no schema-inference job. */
   def index(df: DataFrame, tag: String): DataFrame = {
     val spark = df.sparkSession
+    def scan(dir: String) = spark.read.schema(df.schema).parquet(dir)
     if (!cacheEnabled(spark)) {
       val dir = newDir(spark, tag)
       df.write.mode("overwrite").parquet(dir)
-      return spark.read.parquet(dir)
+      return scan(dir)
     }
     val key = contentKey(df, tag)
     val cached = cache.get(key)
     if (cached != null && exists(spark, cached)) {
       hitCount.incrementAndGet()
-      return spark.read.parquet(cached)
+      return scan(cached)
     }
     missCount.incrementAndGet()
     val dir = newDir(spark, tag)
     df.write.mode("overwrite").parquet(dir)
     cache.put(key, dir)
-    spark.read.parquet(dir)
+    scan(dir)
   }
 
   private def exists(spark: SparkSession, dir: String): Boolean =

@@ -34,6 +34,13 @@ object FieldType extends Enumeration {
   }
 }
 
+/** Where a metric's rows are stored: the archive's two file formats and
+  * the nearline item tables. Each kind holds the declared fields in its
+  * own physical shape ([[Metric.storageSchema]]). */
+object StorageKind extends Enumeration {
+  val Json, Parquet, Nearline = Value
+}
+
 /** A user-visible field of a metric.
   *
   * @param name    user-visible name (what queries reference)
@@ -92,36 +99,57 @@ case class Metric(
     StructType(base +: user :++ radio)
   }
 
-  /** Expected JSON storage schema for a NON-radio metric: the internal
-    * row fields plus every known source column at the type JSON carries
-    * it as (BYTES arrive base64-encoded → string). Passing this to
-    * `spark.read.schema(...).json` skips Spark's schema-inference pass —
-    * at 100 TB that pass is a full extra read of every file per query.
-    * Radio metrics return None: unknown columns are part of their
-    * contract, so they must infer. Values a file carries at an
-    * incompatible type become null (PERMISSIVE), consistent with
-    * "declared types always win" (SURVEY.md §7.4). */
-  def jsonStorageSchema: Option[StructType] =
+  /** Storage schema of this metric's rows in `kind`, derived from the
+    * registry, so that a read needs no schema-inference pass (on Parquet
+    * and JSON that pass is a Spark job per read; at 100 TB it is a full
+    * extra read of every file). It holds the kind's own row fields plus
+    * every source column of every declared field (user name, aliases,
+    * canonical name), de-duplicated case-insensitively (first wins):
+    *  - `Json`: `companykey`, `metrictype`, `timestamp`, `writetime`,
+    *    `aliasname`; each source column at the type JSON carries it as:
+    *    BYTES as base64 text, DECIMAL as text, others at the declared type.
+    *    A value a file carries at an incompatible type becomes null
+    *    (PERMISSIVE), consistent with "declared types always win"
+    *    (SURVEY.md §7.4).
+    *  - `Parquet`: the same row fields; BYTES as binary, DECIMAL as text,
+    *    others at the declared type. A column stored at another type fails
+    *    the read; it never reads as null. The `date=` partition columns
+    *    are still discovered from the directories.
+    *  - `Nearline`: `partition string`, `sort string`, `ids array<string>`
+    *    and one `map<string,string>` per source column (FIXTURES.md §3).
+    *
+    * DECIMAL rides as text on every kind: numbers are stored as strings
+    * (the reference reads Dynamo `N` as string, DynamoRecordReader.java:26-39),
+    * and the string → declared-decimal cast at recombine time is
+    * lossless, where a JSON number would round-trip through a binary
+    * double and lose digits 16+. A declared column missing from the files
+    * reads as null; the recombinator coalesces over the present ones.
+    *
+    * Radio metrics return None and must infer: unknown columns are part of
+    * their contract. */
+  def storageSchema(kind: StorageKind.Value): Option[StructType] =
     if (radioEnabled) None
     else {
-      def carrier(t: FieldType.Value): DataType = t match {
-        case FieldType.BYTES => StringType // base64 text on the JSON path
-        // DECIMAL rides as text: letting Spark's JSON reader parse the
-        // number would round-trip it through a binary double and silently
-        // shave digits 16+; the string → declared-decimal cast at
-        // recombine time is lossless (the reference stores Dynamo N as
-        // string for exactly this reason, DynamoRecordReader.java:26-39).
-        case FieldType.DECIMAL => StringType
-        case other             => FieldType.toSpark(other)
+      val rowFields = kind match {
+        case StorageKind.Nearline => Seq(
+          StructField("partition", StringType),
+          StructField("sort", StringType),
+          StructField("ids", ArrayType(StringType)))
+        case StorageKind.Json | StorageKind.Parquet => Seq(
+          StructField(Metric.OrgKey, StringType),
+          StructField(Metric.MetricTypeKey, StringType),
+          StructField(Metric.TimestampField, LongType),
+          StructField(Metric.WriteTimeField, LongType),
+          StructField(Metric.AliasNameField, StringType))
       }
-      val internal = Seq(
-        StructField(Metric.OrgKey, StringType),
-        StructField(Metric.MetricTypeKey, StringType),
-        StructField(Metric.TimestampField, LongType),
-        StructField(Metric.WriteTimeField, LongType),
-        StructField(Metric.AliasNameField, StringType))
-      val user = fields.flatMap(f => f.sourceColumns.map(c => StructField(c, carrier(f.ftype))))
-      val deduped = (internal ++ user)
+      def carrier(f: Field): DataType = (kind, f.ftype) match {
+        case (StorageKind.Nearline, _)           => MapType(StringType, StringType)
+        case (_, FieldType.DECIMAL)              => StringType
+        case (StorageKind.Json, FieldType.BYTES) => StringType
+        case _                                   => f.sparkType
+      }
+      val user = fields.flatMap(f => f.sourceColumns.map(StructField(_, carrier(f))))
+      val deduped = (rowFields ++ user)
         .foldLeft(Vector.empty[StructField]) { (acc, sf) =>
           if (acc.exists(_.name.equalsIgnoreCase(sf.name))) acc else acc :+ sf
         }

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.schema.{Metric, StorageKind}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -15,18 +16,23 @@ import org.apache.spark.sql.types.StringType
   *   ids        array<string> -- write-ids packed into this item
   *   <field>    map<string,string>  -- per-field {writeId -> value}
   *
+  * The item schema a read asks for comes from the registry
+  * ([[Metric.storageSchema]] with [[StorageKind.Nearline]]), so building a
+  * read starts no schema-inference job; a declared field with no column in
+  * the table reads as a null map, and a field column that is not a
+  * `map<string,string>` fails the read. Radio metrics infer the item schema,
+  * because their unknown fields are columns no registry names.
+  *
   * The AWS-backed implementation would sit behind the same read shape as a
   * DataSourceV2 table (one input partition per scan segment, pushed
   * filters); everything above the raw item read is shared.
   */
 object NearlineStub {
 
-  /** Write items for a table (test/fixture helper). */
-  def writeTable(df: DataFrame, desc: NearlineTableDesc): Unit =
-    df.write.mode("overwrite").parquet(desc.path)
-
-  def readRaw(spark: SparkSession, desc: NearlineTableDesc): DataFrame =
-    spark.read.parquet(desc.path)
+  def readRaw(spark: SparkSession, desc: NearlineTableDesc, metric: Metric): DataFrame =
+    metric.storageSchema(StorageKind.Nearline)
+      .fold(spark.read)(spark.read.schema(_))
+      .parquet(desc.path)
 
   /** Row-field expansion — the reference's DynamoRowFieldExpander operator
     * (`.../rel/expansion/phyiscal/DynamoExpanderBatch.java:60-156`) as a
@@ -60,12 +66,10 @@ object NearlineStub {
       spark: SparkSession,
       desc: NearlineTableDesc,
       orgId: String,
-      metricCanonicalId: String,
-      extraFilter: Option[Column] = None,
+      metric: Metric,
       mapper: KeyMapper = KeyMapper.Concat): DataFrame = {
-    val raw = readRaw(spark, desc)
-      .filter(col("partition") === mapper.partitionKey(orgId, metricCanonicalId))
-    val withSort = extraFilter.fold(raw)(raw.filter)
-    expandRows(withSort).drop("partition")
+    val raw = readRaw(spark, desc, metric)
+      .filter(col("partition") === mapper.partitionKey(orgId, metric.canonicalId))
+    expandRows(raw).drop("partition")
   }
 }

@@ -328,7 +328,8 @@ class PlanSpec extends AnyFunSuite with Matchers {
       org.apache.spark.sql.Row("orgBm1", "100", Seq("w"), Map("w" -> "2")))
     spark.createDataFrame(rows.asJava, schema).write.mode("overwrite").parquet(tmp)
     val df = graft.sources.NearlineStub.readForMetric(
-      spark, graft.sources.NearlineTableDesc("t_0_200", tmp, 0, 200), "orgA", "m1")
+      spark, graft.sources.NearlineTableDesc("t_0_200", tmp, 0, 200), "orgA",
+      graft.schema.Metric("m1", "m1", Seq(graft.schema.Field("f", graft.schema.FieldType.STRING))))
     val p = plan(df)
     p should include("PushedFilters")
     p should include("EqualTo(partition,orgAm1)")

@@ -1,9 +1,13 @@
 package graft.core
 
 import graft.SparkFixture
+import graft.frontend.TenantSession
 import graft.schema._
 import graft.sources._
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graftshim.GraftSessions
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -192,7 +196,7 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
   }
 
   test("non-radio json reads with the registry schema: no inference, unknown columns dropped") {
-    metric.jsonStorageSchema.isDefined shouldBe true
+    metric.storageSchema(StorageKind.Json).isDefined shouldBe true
     val dir = SparkFixture.tempDir("assy_schema")
     // hand-written json with an extra unknown column and a missing alias
     val lines = Seq(
@@ -209,7 +213,7 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
     out.schema.fieldNames.toSeq shouldBe Seq("timestamp", "field1", "val") // no junk leak
     rows.map(r => Option(r.get(2)).orNull).toSeq shouldBe Seq(null, 7L)   // alias feeds val
     // radio metrics must infer (unknown columns are their contract)
-    metric.copy(radioEnabled = true).jsonStorageSchema shouldBe None
+    metric.copy(radioEnabled = true).storageSchema(StorageKind.Json) shouldBe None
   }
 
   test("DECIMAL fields survive the JSON path losslessly (string carrier, no double round-trip)") {
@@ -217,7 +221,7 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
     // carrier type were DoubleType this value would come back mangled.
     val big = "1234567890123456789012345.123456789"
     val m = Metric("md", "dec_metric", Seq(Field("amount", FieldType.DECIMAL)))
-    m.jsonStorageSchema.get("amount").dataType shouldBe StringType
+    m.storageSchema(StorageKind.Json).get("amount").dataType shouldBe StringType
     val dir = SparkFixture.tempDir("assy_decimal")
     val d = new java.io.File(s"$dir/0/json/orgid1/md")
     d.mkdirs()
@@ -228,6 +232,108 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
       SourceSet(fs = Seq(FsSource("json", dir))))
     out.schema("amount").dataType shouldBe DecimalType(38, 9)
     out.collect().head.getDecimal(1) shouldBe new java.math.BigDecimal(big).setScale(9)
+  }
+
+  test("a Parquet archive column stored at another type than declared fails the statement") {
+    val dir = SparkFixture.tempDir("assy_badtype")
+    // `val` is declared LONG; the file stores it as STRING. Even a
+    // numeric string must not be cast through, nor read back as null.
+    spark.createDataFrame(Seq(Row("orgid1", "m1", 10L, "12")).asJava, StructType(Seq(
+      StructField("companykey", StringType), StructField("metrictype", StringType),
+      StructField("timestamp", LongType), StructField("val", StringType))))
+      .write.mode("overwrite").parquet(s"$dir/0/parquet/orgid1/m1")
+    val table = Assembler.metricTable(spark, "orgid1", metric,
+      SourceSet(fs = Seq(FsSource("parquet", dir))))
+    val e = intercept[SparkException](table.collect())
+    e.getMessage should include("PARQUET_COLUMN_DATA_TYPE_MISMATCH")
+    e.getMessage should include("[val]")
+  }
+
+  test("a nearline field column that is not a map fails the statement") {
+    val nlPath = SparkFixture.tempDir("nl_badtype") + "/tbl"
+    spark.createDataFrame(Seq(Row("orgid1m1", "500", Seq("w1"), "51")).asJava, StructType(Seq(
+      StructField("partition", StringType), StructField("sort", StringType),
+      StructField("ids", ArrayType(StringType)), StructField("val", StringType))))
+      .write.mode("overwrite").parquet(nlPath)
+    val table = Assembler.metricTable(spark, "orgid1", metric,
+      SourceSet(nearline = Seq(NearlineTableDesc("t_400_600", nlPath, 400L, 600L))))
+    val e = intercept[SparkException](table.collect())
+    e.getMessage should include("PARQUET_COLUMN_DATA_TYPE_MISMATCH")
+    e.getMessage should include("map<string,string>")
+  }
+
+  test("a radio metric infers on both paths: undeclared columns land in _fm") {
+    val radio = metric.copy(radioEnabled = true)
+    StorageKind.values.toSeq.map(radio.storageSchema) shouldBe Seq(None, None, None)
+    val dir = SparkFixture.tempDir("assy_radio")
+    spark.createDataFrame(Seq(Row("orgid1", "m1", 100L, true, 1L, "p")).asJava, StructType(Seq(
+      StructField("companykey", StringType), StructField("metrictype", StringType),
+      StructField("timestamp", LongType), StructField("field1", BooleanType),
+      StructField("val", LongType), StructField("extra_p", StringType))))
+      .write.mode("overwrite").parquet(s"$dir/0/parquet/orgid1/m1")
+    val nlPath = SparkFixture.tempDir("nl_radio") + "/tbl"
+    val map = MapType(StringType, StringType)
+    spark.createDataFrame(
+      Seq(Row("orgid1m1", "500", Seq("w"), Map("w" -> "true"), Map("w" -> "5"), Map("w" -> "n"))).asJava,
+      StructType(Seq(
+        StructField("partition", StringType), StructField("sort", StringType),
+        StructField("ids", ArrayType(StringType)), StructField("field1", map),
+        StructField("val", map), StructField("extra_n", map))))
+      .write.mode("overwrite").parquet(nlPath)
+    val out = Assembler.metricTable(spark, "orgid1", radio, SourceSet(
+      fs = Seq(FsSource("parquet", dir)),
+      nearline = Seq(NearlineTableDesc("t_400_600", nlPath, 400L, 600L))))
+    out.collect().map(r => (r.getLong(0), r.getLong(2), r.getMap[String, String](3))).toSeq shouldBe
+      Seq((100L, 1L, Map("extra_p" -> "p")), (500L, 5L, Map("extra_n" -> "n")))
+  }
+
+  /** Run `f` under a fresh job group; return its result and the number of
+    * Spark jobs it started (counted by group, so jobs of other threads
+    * never land in the count). */
+  private def jobsFiredBy[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"assembler-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    GraftSessions.drainListenerBus(spark)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job-count pin")
+    try {
+      val a = f
+      GraftSessions.drainListenerBus(spark)
+      (a, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("building a non-radio table starts no job; a one-window point read runs one") {
+    val dir = SparkFixture.tempDir("assy_jobs")
+    writeArchive(dir, "json", Seq(Row("orgid1", "m1", 100L, true, 1L)))
+    writeArchive(dir, "parquet", Seq(Row("orgid1", "m1", 50L, false, 2L)))
+    val nlDir = SparkFixture.tempDir("nl_jobs")
+    writeNearline(s"$nlDir/a", Seq(Row("orgid1m1", "250", Seq("w"), Map("w" -> "true"), Map("w" -> "25"))))
+    writeNearline(s"$nlDir/b", Seq(Row("orgid1m1", "450", Seq("w"), Map("w" -> "true"), Map("w" -> "45"))))
+    val sources = SourceSet(
+      fs = Seq(FsSource("json", dir), FsSource("parquet", dir)),
+      nearline = Seq(
+        NearlineTableDesc("t_200_400", s"$nlDir/a", 200L, 400L),
+        NearlineTableDesc("t_400_600", s"$nlDir/b", 400L, 600L)))
+    val (table, buildJobs) = jobsFiredBy(Assembler.metricTable(spark, "orgid1", metric, sources))
+    buildJobs shouldBe 0
+    table.collect().map(r => (r.getLong(0), r.getLong(2))).toSeq shouldBe
+      Seq((50L, 2L), (100L, 1L), (250L, 25L), (450L, 45L))
+
+    val tenant = TenantSession.open(spark, SchemaRegistry(Org("orgid1", Seq(metric))), "orgid1", sources)
+    val (rows, readJobs) = jobsFiredBy(tenant.sql(
+      "SELECT `timestamp`, val FROM metricid1 WHERE `timestamp` >= 240 AND `timestamp` < 300").collect())
+    rows.map(r => (r.getLong(0), r.getLong(1))).toSeq shouldBe Seq((250L, 25L))
+    readJobs shouldBe 1
   }
 
   test("registry JSON accepts DECIMAL and DECIMAL(p,s) declarations") {
