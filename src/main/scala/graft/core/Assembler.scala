@@ -2,15 +2,16 @@ package graft.core
 
 import graft.schema.{Metric, StorageKind}
 import graft.sources.{FsSource, NearlineStub, SourceSet}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Assembles the per-metric logical table: the reference's whole custom
   * plan chain — marker rel → source selection → per-source recombination →
   * UNION ALL → overlap cutoff → sort (SURVEY.md §3, lifecycle steps 5-6) —
-  * as eager DataFrame construction. Source selection happens here, at
-  * assembly time, from the caller-supplied time predicate
-  * ([[SourceSet.prune]]); Catalyst then handles filter pushdown past the
+  * as eager DataFrame construction. It reads exactly the sources it is
+  * given: time-range source selection is the caller's, done once per
+  * relation by the tenant frontend (`Substitution.boundsFor` →
+  * [[SourceSet.prune]]); Catalyst then handles filter pushdown past the
   * union and column pruning. The archive's `date=` directories are not
   * pruned: no tenant statement bounds `date`. Every source of a non-radio
   * metric is read with the storage schema the registry declares
@@ -19,12 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Assembler {
 
-  /** Build the time-ordered DataFrame for one (org, metric).
+  /** Build the time-ordered DataFrame for one (org, metric) over
+    * `sources`, already pruned by the caller for the statement's range.
     *
-    * @param timeFilter optional predicate over this metric's columns; its
-    *   `timestamp` bounds (extracted with [[TimeRange]]'s conservative
-    *   rules) drive source pruning; the predicate itself is also applied
-    *   as a normal row filter (residual semantics).
     * @param sorted the table contract is time-ordered output
     *   (`FineoRecombinatorRule.java:171-177`); pass false for inner use
     *   where an aggregation on top would destroy order anyway.
@@ -34,12 +32,8 @@ object Assembler {
       orgId: String,
       metric: Metric,
       sources: SourceSet,
-      timeFilter: Option[Column] = None,
       sorted: Boolean = true): DataFrame = {
-    val range = timeFilter.map(TimeRange.extract(Metric.TimestampField, _)).getOrElse(TimeRange.Full)
-    val pruned = sources.prune(range)
-
-    val fsDfs = pruned.fs.flatMap(readFs(spark, _, orgId, metric))
+    val fsDfs = sources.fs.flatMap(readFs(spark, _, orgId, metric))
 
     // Overlap de-duplication by cutoff, not by key (reference R2,
     // `ConvertFineoMarkerIntoFilteredInputTables.java:144-177`): archive
@@ -50,19 +44,20 @@ object Assembler {
     // windows; the per-window exclusion is identical when windows are
     // contiguous (the deployed layout) and strictly lossless when they are
     // not. The predicate is a short OR over window bounds — it pushes to
-    // the scan as plain range filters. Because of this cut, `prune` drops
-    // the archive outright when the kept windows cover the whole range;
-    // it reaches this point only for ranges with an uncovered timestamp.
+    // the scan as plain range filters. Because of this cut, the caller's
+    // `prune` drops the archive outright when the kept windows cover the
+    // whole range; it reaches this point only for ranges with an
+    // uncovered timestamp.
     val cutFsDfs =
-      if (pruned.nearline.nonEmpty && fsDfs.nonEmpty) {
+      if (sources.nearline.nonEmpty && fsDfs.nonEmpty) {
         val ts = col(Metric.TimestampField)
-        val coveredByNearline = pruned.nearline
+        val coveredByNearline = sources.nearline
           .map(w => ts >= w.startMillis && ts < w.endMillis)
           .reduce(_ || _)
         fsDfs.map(_.filter(!coveredByNearline))
       } else fsDfs
 
-    val nearlineDfs = pruned.nearline.map { desc =>
+    val nearlineDfs = sources.nearline.map { desc =>
       val raw = NearlineStub.readForMetric(spark, desc, orgId, metric, mapper = sources.keyMapper)
       Recombinator.project(raw, metric, bytesAreBase64 = false)
     }
@@ -70,8 +65,7 @@ object Assembler {
     val all = cutFsDfs ++ nearlineDfs
     require(all.nonEmpty, s"no sources for $orgId/${metric.displayName}")
     val unioned = all.reduce(_.unionByName(_, allowMissingColumns = true))
-    val filtered = timeFilter.fold(unioned)(unioned.filter)
-    if (sorted) filtered.orderBy(Metric.TimestampField) else filtered
+    if (sorted) unioned.orderBy(Metric.TimestampField) else unioned
   }
 
   /** Does `dir` exist on its own filesystem? Asked of Hadoop's

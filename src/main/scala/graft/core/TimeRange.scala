@@ -1,8 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftshim.ColumnExpr
-import org.apache.spark.sql.graftshim.ColumnExpr.{Attr, Fn, Lit, P}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
 
 /** Interval over epoch millis with inclusive bounds [min, max];
   * `Full` means "no information — scan everything". */
@@ -20,7 +20,10 @@ case class TimeRange(min: Long = Long.MinValue, max: Long = Long.MaxValue) {
 object TimeRange {
   val Full: TimeRange = TimeRange()
 
-  /** Extract the timestamp bounds implied by a filter Column.
+  /** Extract the timestamp bounds implied by a parsed (unresolved)
+    * filter condition. The tenant frontend calls this on each statement's
+    * filters above a metric relation (`Substitution.boundsFor`), and the
+    * range drives source selection ([[graft.sources.SourceSet.prune]]).
     *
     * Mirrors the conservatism of the reference's
     * `TimestampExpressionBuilder` (`fineo-adapter-drill/.../partition/
@@ -31,47 +34,10 @@ object TimeRange {
     * non-ANSI semantics). Any construct we don't understand (`<>`,
     * `NOT …`, arithmetic, IS NULL, other casts, other columns, …) widens
     * to Full — never narrows. Widening is always safe:
-    * the residual Spark filter still applies row-by-row; this range only
+    * the statement's filter still applies row-by-row; this range only
     * drives *source selection* (which tables/directories to read at all).
-    *
-    * Works on the pre-analysis ColumnNode tree (the predicate is built
-    * against a not-yet-assembled table, so catalyst resolution hasn't
-    * happened yet).
     */
-  def extract(tsColumn: String, cond: Column): TimeRange =
-    extract(tsColumn.toLowerCase, ColumnExpr.predTree(cond))
-
-  private def extract(ts: String, p: P): TimeRange = p match {
-    case Fn("and", Seq(l, r)) => extract(ts, l).intersect(extract(ts, r))
-    case Fn("or", Seq(l, r))  => extract(ts, l).union(extract(ts, r))
-    case Fn(op, Seq(Attr(`ts`), LongLit(v))) => fromCompare(op, v, flipped = false)
-    case Fn(op, Seq(LongLit(v), Attr(`ts`))) => fromCompare(op, v, flipped = true)
-    case Fn("in", Attr(`ts`) +: vs) => hull(vs.map(LongLit.unapply))
-    case _ => Full
-  }
-
-  /** Hull of an IN list; Full unless every element is an integer literal. */
-  private def hull(vs: Seq[Option[Long]]): TimeRange =
-    if (vs.isEmpty || vs.exists(_.isEmpty)) Full
-    else TimeRange(vs.flatten.min, vs.flatten.max)
-
-  private object LongLit {
-    def unapply(p: P): Option[Long] = p match {
-      case Lit(v: Long)  => Some(v)
-      case Lit(v: Int)   => Some(v.toLong)
-      case Lit(v: Short) => Some(v.toLong)
-      case _ => None
-    }
-  }
-
-  /** Same extraction over a parsed (unresolved) catalyst Expression — the
-    * path used when the predicate comes from SQL text (tenant frontend)
-    * rather than a Column. Same conservatism contract. */
-  def extractExpr(tsColumn: String, e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : TimeRange = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
+  def extract(tsColumn: String, e: Expression): TimeRange = {
     val ts = tsColumn.toLowerCase
     def attr(x: Expression): Option[String] = x match {
       case a: UnresolvedAttribute  => Some(a.name.toLowerCase)
@@ -102,17 +68,9 @@ object TimeRange {
         }
       case In(a, vs) if isTs(a) => hull(vs.map(lit))
       case cmp: BinaryComparison =>
-        val op = cmp match {
-          case _: EqualTo => "="
-          case _: LessThan => "<"
-          case _: LessThanOrEqual => "<="
-          case _: GreaterThan => ">"
-          case _: GreaterThanOrEqual => ">="
-          case _ => "?"
-        }
         (lit(cmp.right), lit(cmp.left)) match {
-          case (Some(v), _) if isTs(cmp.left)  => fromCompare(op, v, flipped = false)
-          case (_, Some(v)) if isTs(cmp.right) => fromCompare(op, v, flipped = true)
+          case (Some(v), _) if isTs(cmp.left)  => fromCompare(cmp, v, flipped = false)
+          case (_, Some(v)) if isTs(cmp.right) => fromCompare(cmp, v, flipped = true)
           case _ => Full
         }
       case _ => Full
@@ -120,12 +78,19 @@ object TimeRange {
     go(e)
   }
 
-  private def fromCompare(op: String, v: Long, flipped: Boolean): TimeRange = op match {
-    case "=" | "==" | "===" | "equal" => TimeRange(v, v)
-    case "<"  => if (flipped) TimeRange(min = v + 1) else TimeRange(max = v - 1)
-    case "<=" => if (flipped) TimeRange(min = v) else TimeRange(max = v)
-    case ">"  => if (flipped) TimeRange(max = v - 1) else TimeRange(min = v + 1)
-    case ">=" => if (flipped) TimeRange(max = v) else TimeRange(min = v)
-    case _ => Full
-  }
+  /** Hull of an IN list; Full unless every element is an integer literal. */
+  private def hull(vs: Seq[Option[Long]]): TimeRange =
+    if (vs.isEmpty || vs.exists(_.isEmpty)) Full
+    else TimeRange(vs.flatten.min, vs.flatten.max)
+
+  /** Bounds of `ts cmp v`, or of `v cmp ts` when `flipped`. */
+  private def fromCompare(cmp: BinaryComparison, v: Long, flipped: Boolean): TimeRange =
+    cmp match {
+      case _: EqualTo            => TimeRange(v, v)
+      case _: LessThan           => if (flipped) TimeRange(min = v + 1) else TimeRange(max = v - 1)
+      case _: LessThanOrEqual    => if (flipped) TimeRange(min = v) else TimeRange(max = v)
+      case _: GreaterThan        => if (flipped) TimeRange(max = v - 1) else TimeRange(min = v + 1)
+      case _: GreaterThanOrEqual => if (flipped) TimeRange(max = v) else TimeRange(min = v)
+      case _ => Full
+    }
 }

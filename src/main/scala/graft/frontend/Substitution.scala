@@ -71,7 +71,7 @@ private[frontend] object Substitution {
       case f: LFilter if reaches(f.child) => f.condition
     }
     if (conds.isEmpty) TimeRange.Full
-    else conds.map(TimeRange.extractExpr(Metric.TimestampField, _)).reduce(_ intersect _)
+    else conds.map(TimeRange.extract(Metric.TimestampField, _)).reduce(_ intersect _)
   }
 
   /** Validate every table reference and splice the tenant's assembled
@@ -108,15 +108,17 @@ private[frontend] object Substitution {
       val isBare = parts.size == 1
       if (isBare && cteNames.contains(bare)) ()                 // CTE wins
       else if (isBare && views.contains(bare)) ()               // errors table
-      else if (isBare && registry.metric(orgId, parts.head).isDefined) {
-        val m = registry.metric(orgId, parts.head).get
-        val range = boundsFor(r, parsed)
-        val df = Assembler.metricTable(
-          spark, orgId, m, sources.prune(range), sorted = false)
-        replacements.put(r, SubqueryAlias(parts.head, ColumnExpr.logical(df)))
-      } else if (strict)
-        throw new SecurityException(
-          s"table not found for tenant $orgId: ${parts.mkString(".")}")
+      else (if (isBare) registry.metric(orgId, parts.head) else None) match {
+        case Some(m) =>
+          val range = boundsFor(r, parsed)
+          val df = Assembler.metricTable(
+            spark, orgId, m, sources.prune(range), sorted = false)
+          replacements.put(r, SubqueryAlias(parts.head, ColumnExpr.logical(df)))
+        case None if strict =>
+          throw new SecurityException(
+            s"table not found for tenant $orgId: ${parts.mkString(".")}")
+        case None => ()
+      }
     }
     deepTransform(parsed) {
       case r: UnresolvedRelation if replacements.containsKey(r) =>

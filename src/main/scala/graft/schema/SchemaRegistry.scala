@@ -156,11 +156,6 @@ case class Metric(
       Some(StructType(deduped))
     }
 
-  def fieldByNameOrAlias(n: String): Option[Field] = {
-    val lower = n.toLowerCase
-    fields.find(f => f.name.toLowerCase == lower || f.aliases.exists(_.toLowerCase == lower))
-  }
-
   /** Every storage column name that maps to some declared field (lowercased). */
   def knownStorageColumns: Set[String] =
     fields.flatMap(_.sourceColumns).map(_.toLowerCase).toSet ++
@@ -200,7 +195,6 @@ case class Org(orgId: String, metrics: Seq[Metric]) {
   */
 class SchemaRegistry(@volatile private var orgs: Map[String, Org]) {
   def org(orgId: String): Option[Org] = orgs.get(orgId)
-  def orgIds: Seq[String] = orgs.keys.toSeq.sorted
   def metric(orgId: String, table: String): Option[Metric] =
     org(orgId).flatMap(_.metricForNameOrAlias(table))
   /** Tenant-scoped table listing (info-schema surface, SURVEY.md §2.1 S8). */

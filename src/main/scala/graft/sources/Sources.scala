@@ -45,9 +45,6 @@ case class SourceSet(
     fs: Seq[FsSource] = Nil,
     nearline: Seq[NearlineTableDesc] = Nil,
     keyMapper: KeyMapper = KeyMapper.Concat) {
-  def minNearlineStart: Option[Long] =
-    if (nearline.isEmpty) None else Some(nearline.map(_.startMillis).min)
-
   /** Time-range source pruning (reference R1,
     * `ConvertFineoMarkerIntoFilteredInputTables.java:183-285`), exact for
     * any sound `range` (every row the statement can see has a timestamp in

@@ -7,8 +7,8 @@ import graft.sources._
 import org.apache.spark.SparkException
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.graftshim.GraftSessions
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -23,6 +23,9 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
   private val metric = Metric("m1", "metricid1", Seq(
     Field("field1", FieldType.BOOLEAN),
     Field("val", FieldType.LONG, aliases = Seq("v_alias"))))
+
+  private def sqlRange(pred: String): TimeRange =
+    TimeRange.extract("timestamp", CatalystSqlParser.parseExpression(pred))
 
   private def writeArchive(basedir: String, format: String, rows: Seq[Row]): Unit = {
     val schema = StructType(Seq(
@@ -128,8 +131,8 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
       (300L, 200L, false)) // empty
     cases.foreach { case (lo, hi, covered) =>
       withClue(s"[$lo, $hi]: ") {
-        val pred = col("timestamp") >= lo && col("timestamp") <= hi
-        val range = TimeRange.extract("timestamp", pred)
+        val pred = s"`timestamp` >= $lo AND `timestamp` <= $hi"
+        val range = sqlRange(pred)
         range shouldBe TimeRange(lo, hi)
         val pruned = sources.prune(range)
         pruned.fs.isEmpty shouldBe covered
@@ -179,20 +182,21 @@ class AssemblerSpec extends AnyFunSuite with Matchers {
     val sources = SourceSet(nearline = Seq(
       NearlineTableDesc("t_0_500", nl1, 0L, 500L),
       NearlineTableDesc("t_500_1000", nl2, 500L, 1000L)))
-    val pruned = sources.prune(TimeRange.extract("timestamp", col("timestamp") < 400L))
+    val pruned = sources.prune(sqlRange("`timestamp` < 400"))
     pruned.nearline.map(_.name) shouldBe Seq("t_0_500")
-    // and the full query honors the residual filter
-    val out = Assembler.metricTable(spark, "orgid1", metric, sources,
-      timeFilter = Some(col("timestamp") < 400L))
+    // and a tenant statement prunes the same way and still applies its
+    // filter row by row
+    val tenant = TenantSession.open(spark, SchemaRegistry(Org("orgid1", Seq(metric))), "orgid1", sources)
+    val out = tenant.sql("SELECT `timestamp` FROM metricid1 WHERE `timestamp` < 400")
     out.collect().map(_.getLong(0)).toSeq shouldBe Seq(100L)
+    out.inputFiles.exists(_.contains(nl2)) shouldBe false
   }
 
   test("opaque predicates scan all sources (conservatism)") {
     val sources = SourceSet(nearline = Seq(
       NearlineTableDesc("t_0_500", "x", 0L, 500L),
       NearlineTableDesc("t_500_1000", "y", 500L, 1000L)))
-    val r = TimeRange.extract("timestamp", col("timestamp") =!= 100L)
-    sources.prune(r).nearline should have length 2
+    sources.prune(sqlRange("`timestamp` <> 100")).nearline should have length 2
   }
 
   test("non-radio json reads with the registry schema: no inference, unknown columns dropped") {

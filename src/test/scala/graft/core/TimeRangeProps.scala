@@ -1,8 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -10,9 +8,11 @@ import org.scalacheck.Prop.forAll
   * (reference `TimestampExpressionBuilder.java:71-134` conservatism):
   * for ANY predicate built from comparisons/BETWEEN/IN/AND/OR — including
   * conjuncts the extractor can't parse — every timestamp that satisfies
-  * the predicate lies inside the extracted range, for a Column and for the
-  * same predicate as SQL text. Source pruning driven by the range can
-  * therefore never drop a matching row.
+  * the predicate, written as SQL text, lies inside the extracted range.
+  * Source pruning driven by the range can therefore never drop a matching
+  * row. The generator, its SQL rendering and its ground truth also drive
+  * the statement-level property over `Substitution.boundsFor`
+  * (`graft.frontend.BoundsForProps`).
   */
 object TimeRangeProps extends Properties("TimeRange") {
 
@@ -31,7 +31,7 @@ object TimeRangeProps extends Properties("TimeRange") {
 
   private val genV: Gen[Long] = Gen.choose(-100L, 100L)
   /** Timestamps near 0 and near 2^32; an INT cast maps 2^32 + x to x. */
-  private val genTs: Gen[Long] = Gen.frequency(3 -> genV, 1 -> genV.map(_ + (1L << 32)))
+  val genTs: Gen[Long] = Gen.frequency(3 -> genV, 1 -> genV.map(_ + (1L << 32)))
   private val genOp: Gen[String] = Gen.oneOf("=", "<", "<=", ">", ">=")
   private val genLeafT: Gen[TP] = Gen.frequency(
     5 -> (for { op <- genOp; v <- genV } yield Leaf(op, v)),
@@ -41,7 +41,7 @@ object TimeRangeProps extends Properties("TimeRange") {
     1 -> (for { op <- genOp; v <- Gen.oneOf(genV, genV.map(_ + 65536)) } yield NarrowLit(op, v)),
   )
 
-  private def genTP(d: Int): Gen[TP] =
+  def genTP(d: Int): Gen[TP] =
     if (d <= 0) genLeafT
     else Gen.frequency(
       3 -> genLeafT,
@@ -50,30 +50,7 @@ object TimeRangeProps extends Properties("TimeRange") {
       1 -> genTP(d - 1).map(OpaqueAnd(_)),
     )
 
-  private def compare(op: String, l: Column, r: Column): Column = op match {
-    case "="  => l === r
-    case "<"  => l < r
-    case "<=" => l <= r
-    case ">"  => l > r
-    case _    => l >= r
-  }
-
-  private def toColumn(t: TP): Column = t match {
-    case Leaf(op, v)         => compare(op, col("timestamp"), lit(v))
-    case Between(lo, hi, n)  =>
-      val b = col("timestamp").between(lo, hi); if (n) !b else b
-    case In(vs, n)           =>
-      val i = col("timestamp").isin(vs: _*); if (n) !i else i
-    case NarrowTs(op, v)     => compare(op, col("timestamp").cast("int"), lit(v))
-    case NarrowLit(op, v)    => compare(op, col("timestamp"), lit(v).cast("short"))
-    case AndT(l, r)    => toColumn(l) && toColumn(r)
-    case OrT(l, r)     => toColumn(l) || toColumn(r)
-    // arithmetic over another column: the extractor must widen this
-    // conjunct to Full, not misparse it
-    case OpaqueAnd(i)  => toColumn(i) && (col("other") + 1 > 0)
-  }
-
-  private def toSql(t: TP): String = t match {
+  def toSql(t: TP): String = t match {
     case Leaf(op, v)        => s"timestamp $op $v"
     case Between(lo, hi, n) => s"timestamp ${if (n) "NOT " else ""}BETWEEN $lo AND $hi"
     case In(vs, n)          => s"timestamp ${if (n) "NOT " else ""}IN (${vs.mkString(", ")})"
@@ -94,7 +71,7 @@ object TimeRangeProps extends Properties("TimeRange") {
 
   /** Ground truth with non-ANSI casts, under an assignment where `other`
     * makes the opaque conjunct true. */
-  private def eval(t: TP, ts: Long): Boolean = t match {
+  def eval(t: TP, ts: Long): Boolean = t match {
     case Leaf(op, v)        => holds(op, ts, v)
     case Between(lo, hi, n) => (lo <= ts && ts <= hi) != n
     case In(vs, n)          => vs.contains(ts) != n
@@ -105,31 +82,19 @@ object TimeRangeProps extends Properties("TimeRange") {
     case OpaqueAnd(i)  => eval(i, ts)
   }
 
-  property("every satisfying timestamp is inside the extracted range") =
-    forAll(genTP(3), genTs) { (t, ts) =>
-      val r = TimeRange.extract("timestamp", toColumn(t))
-      !eval(t, ts) || (ts >= r.min && ts <= r.max)
-    }
-
   property("every satisfying timestamp is inside the range extracted from SQL text") =
     forAll(genTP(3), genTs) { (t, ts) =>
-      val r = TimeRange.extractExpr("timestamp", CatalystSqlParser.parseExpression(toSql(t)))
+      val r = TimeRange.extract("timestamp", CatalystSqlParser.parseExpression(toSql(t)))
       !eval(t, ts) || (ts >= r.min && ts <= r.max)
     }
 
   property("extraction is stable under flipped operand order") =
     forAll(genV, Gen.oneOf("<", "<=", ">", ">=")) { (v, op) =>
-      val normal = op match {
-        case "<"  => col("timestamp") < v
-        case "<=" => col("timestamp") <= v
-        case ">"  => col("timestamp") > v
-        case _    => col("timestamp") >= v
-      }
       val flippedOp = op match {
-        case "<" => lit(v) > col("timestamp"); case "<=" => lit(v) >= col("timestamp")
-        case ">" => lit(v) < col("timestamp"); case _    => lit(v) <= col("timestamp")
+        case "<" => ">"; case "<=" => ">="; case ">" => "<"; case _ => "<="
       }
-      TimeRange.extract("timestamp", normal) ==
-        TimeRange.extract("timestamp", flippedOp)
+      def range(sql: String) =
+        TimeRange.extract("timestamp", CatalystSqlParser.parseExpression(sql))
+      range(s"timestamp $op $v") == range(s"$v $flippedOp timestamp")
     }
 }
