@@ -30,6 +30,15 @@ import java.util.concurrent.atomic.AtomicInteger
   * resolves the per-org TenantSession; an unknown key is an error
   * response, and every later RPC on that connectionId is tenant-bound.
   *
+  * One listener, one tenant per key (the reference's `FineoServer` is
+  * the one HTTP server of a deployment): the same listener serves the
+  * REST routes (`POST /v1/sql`, `GET /v1/metadata/…`, see
+  * [[GraftHttpServer]]) and `/healthz` + `/metrics`. Every route
+  * resolves a key through ONE cache that calls `sessionFor` once per key,
+  * so all of a tenant's connections and REST requests share one
+  * [[TenantSession]] — one concurrent-statement clamp, one FAIR pool,
+  * one set of pool gauges — and `serverMaxRows` caps every route.
+  *
   * Parameterized statements (reference `FineoJdbcMeta` delegates the full
   * Avatica `JdbcMeta` prepare/execute surface): `prepare` records the SQL
   * and returns a statement handle whose signature advertises one generic
@@ -70,15 +79,31 @@ class GraftAvaticaServer(
 
   private val mapper = new ObjectMapper()
 
-  // FAIR-scheduling precondition (ServingFairness: warn + metric once —
-  // the conf is static, so boot-time detection is all the product owns)
+  // FAIR-scheduling precondition, checked ONCE per server (ServingFairness:
+  // warn + metric — the conf is static, so detection is all the product
+  // owns): at boot when the engine session was passed, else at the first
+  // tenant session this server resolves
   private val fairChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
   engine.foreach { s =>
     fairChecked.set(true)
     ServingFairness.ensureFair(s, "GraftAvaticaServer", metrics)
   }
 
-  private case class Conn(tenant: TenantSession)
+  private val sessions = new ConcurrentHashMap[String, TenantSession]()
+
+  /** The tenant of `key`, shared by every route on this listener:
+    * `sessionFor` and the pool-gauge registration run once per key. An
+    * unknown key throws (SecurityException) and caches nothing. */
+  private def tenantSession(key: String): TenantSession = {
+    val t = sessions.computeIfAbsent(key, k => {
+      val s = sessionFor(k)
+      s.registerPoolGauges(metrics)
+      s
+    })
+    if (fairChecked.compareAndSet(false, true))
+      ServingFairness.ensureFair(t.spark, "GraftAvaticaServer", metrics)
+    t
+  }
 
   /** One statement's state: prepared SQL (for prepare/execute) and the
     * live cursor. The cursor holds an iterator FACTORY, not just the
@@ -198,7 +223,7 @@ class GraftAvaticaServer(
     }
   }
 
-  private val conns = new ConcurrentHashMap[String, Conn]()
+  private val conns = new ConcurrentHashMap[String, TenantSession]()
   private val stmts = new ConcurrentHashMap[(String, Int), Stmt]()
   private val nextStmt = new AtomicInteger(0)
 
@@ -206,28 +231,14 @@ class GraftAvaticaServer(
 
   metrics.gauge("avatica.open_connections")(conns.size().toLong)
   metrics.gauge("avatica.open_statements")(stmts.size().toLong)
+  metrics.gauge("http.open_sessions")(sessions.size().toLong)
 
   private val server: HttpServer = {
     val s = HttpServer.create(new InetSocketAddress(port), 0)
-    // Operational endpoints on the same listener (reference FineoServer
-    // wires Dropwizard health + metrics into its Avatica server): the
-    // JDK server routes by longest matching prefix, so these win over "/"
-    s.createContext("/healthz", (ex: HttpExchange) => {
-      val (status, body) =
-        HealthChecks.httpResponse(HealthChecks.run(engine, tenant = None))
-      val bytes = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length)
-      val os = ex.getResponseBody
-      try os.write(bytes) finally os.close()
-    })
-    s.createContext("/metrics", (ex: HttpExchange) => {
-      val bytes = metrics.snapshotJson.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(200, bytes.length)
-      val os = ex.getResponseBody
-      try os.write(bytes) finally os.close()
-    })
+    // REST, health and metrics routes on the same listener (reference
+    // FineoServer wires Dropwizard health + metrics into its Avatica
+    // server, and the proxy reaches tenants through it)
+    GraftHttpServer.mount(s, tenantSession, serverMaxRows, engine, metrics)
     s.createContext("/", (ex: HttpExchange) => {
       // Content negotiation, the reference server's topology: protobuf is
       // Avatica's default production wire (`AvaticaProtobufHandler` in
@@ -281,11 +292,8 @@ class GraftAvaticaServer(
             }
           (st, body.getBytes(UTF_8))
         }
-      ex.getResponseHeaders.set("Content-Type",
-        if (proto) "application/x-google-protobuf" else "application/json")
-      ex.sendResponseHeaders(status, bytes.length)
-      val os = ex.getResponseBody
-      try os.write(bytes) finally os.close()
+      WireIo.send(ex, status,
+        if (proto) "application/x-google-protobuf" else "application/json", bytes)
     })
     s.setExecutor(pool)
     s.start()
@@ -312,9 +320,9 @@ class GraftAvaticaServer(
   private def handle(req: JsonNode): String = {
     def cid: String = req.get("connectionId").asText()
     def sid: Int = req.get("statementId").asInt()
-    // The SERVER always owns a cap (reference setMaxRows; same invariant
-    // as the HTTP layer's mandatory clamp) — a client's maxRowCount may
-    // only lower it; -1/absent means "server default", never "unbounded".
+    // The SERVER always owns a cap (reference setMaxRows; the same cap the
+    // REST route applies) — a client's maxRowCount may only lower it;
+    // -1/absent means "server default", never "unbounded".
     def clampOf(field: String): Int = {
       val v = Option(req.get(field)).map(_.asLong()).getOrElse(-1L)
       if (v > 0) math.min(v, serverMaxRows.toLong).toInt else serverMaxRows
@@ -343,11 +351,7 @@ class GraftAvaticaServer(
           .map(_.asText()).filter(_.nonEmpty)
           .getOrElse(throw new SecurityException(
             "connection info must carry the tenant api key"))
-        val tenant = sessionFor(key) // SecurityException if unknown
-        tenant.registerPoolGauges(metrics)
-        if (fairChecked.compareAndSet(false, true))
-          ServingFairness.ensureFair(tenant.spark, "GraftAvaticaServer", metrics)
-        conns.put(cid, Conn(tenant))
+        conns.put(cid, tenantSession(key)) // SecurityException if unknown
         """{"response":"openConnection"}"""
       case "connectionSync" =>
         connOf(cid)
@@ -368,12 +372,12 @@ class GraftAvaticaServer(
         stmts.remove((cid, sid))
         """{"response":"closeStatement"}"""
       case "prepareAndExecute" =>
-        val conn = connOf(cid)
+        val tenant = connOf(cid)
         val st = stmtOf(cid, sid)
         // gated: the tenant's FAIR pool + concurrent-statement clamp
         // cover execution AND the first frame's pull
-        conn.tenant.runGated {
-          runStatement(conn, st, req.get("sql").asText(), clampOf("maxRowCount"))
+        tenant.runGated {
+          runStatement(tenant, st, req.get("sql").asText(), clampOf("maxRowCount"))
           executeResultsJson(cid, sid, st)
         }
       case "prepare" =>
@@ -391,18 +395,18 @@ class GraftAvaticaServer(
         val h = req.get("statementHandle")
         val hcid = h.get("connectionId").asText()
         val hsid = h.get("id").asInt()
-        val conn = connOf(hcid)
+        val tenant = connOf(hcid)
         val st = stmtOf(hcid, hsid)
         val sql = st.preparedSql.getOrElse(throw new IllegalStateException(
           s"statement $hsid was not prepared"))
         val params = Option(req.get("parameterValues"))
           .map(a => (0 until a.size()).map(a.get)).getOrElse(Seq.empty)
-        conn.tenant.runGated {
-          runStatement(conn, st, bindParameters(sql, params), st.preparedMaxRows)
+        tenant.runGated {
+          runStatement(tenant, st, bindParameters(sql, params), st.preparedMaxRows)
           executeResultsJson(hcid, hsid, st)
         }
       case "fetch" =>
-        val conn = connOf(cid)
+        val tenant = connOf(cid)
         val st = stmtOf(cid, sid)
         val offset = Option(req.get("offset")).map(_.asInt()).getOrElse(0)
         val n = Option(req.get("fetchMaxRowCount")).map(_.asInt())
@@ -418,7 +422,7 @@ class GraftAvaticaServer(
         // None and this fetch takes the gated path like any other.
         val frame = st.frameAtBuffered(offset, n) match {
           case Some((slice, done)) => renderFrame(offset, slice, done)
-          case None => conn.tenant.runGated(frameJson(st, offset, n))
+          case None => tenant.runGated(frameJson(st, offset, n))
         }
         s"""{"response":"fetch","connectionId":${JsonCodec.jstr(cid)},""" +
           s""""statementId":$sid,"frame":$frame}"""
@@ -444,8 +448,8 @@ class GraftAvaticaServer(
       case m @ ("schemas" | "getSchemas" | "tables" | "getTables" |
           "columns" | "getColumns" | "tableTypes" | "getTableTypes" |
           "typeInfo" | "getTypeInfo" | "catalogs" | "getCatalogs") =>
-        val conn = connOf(cid)
-        val meta = conn.tenant.metadata
+        val tenant = connOf(cid)
+        val meta = tenant.metadata
         def pat(field: String): String =
           Option(req.get(field)).map(_.asText()).orNull
         val df = m.stripPrefix("get").toLowerCase match {
@@ -473,15 +477,15 @@ class GraftAvaticaServer(
   /** Run `sql` through the tenant (clamped) and point the statement's
     * cursor at the result — a `toLocalIterator`, so rows stream into
     * frames instead of materializing server-side. */
-  private def runStatement(conn: Conn, st: Stmt, sql: String, perCall: Int): Unit = {
+  private def runStatement(tenant: TenantSession, st: Stmt, sql: String, perCall: Int): Unit = {
     // Parameter literals are rendered with backslash doubling, which the
     // legacy escapedStringLiterals parser mode would mis-read (see
     // literalOf.str) — refuse to run against a session in that mode
     // rather than corrupt bound values.
     require(
-      !conn.tenant.spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").toBoolean,
+      !tenant.spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").toBoolean,
       "serving sessions must keep spark.sql.parser.escapedStringLiterals=false")
-    val df = conn.tenant.sql(sql, Some(perCall))
+    val df = tenant.sql(sql, Some(perCall))
     st.reset(df.schema.fields.toSeq, () => localIterator(df))
   }
 
@@ -498,7 +502,7 @@ class GraftAvaticaServer(
       s""""firstFrame":$frame,"updateCount":-1}]}"""
   }
 
-  private def connOf(cid: String): Conn = {
+  private def connOf(cid: String): TenantSession = {
     val c = conns.get(cid)
     if (c == null) throw new IllegalStateException(s"no open connection: $cid")
     c

@@ -1,193 +1,161 @@
 package graft.frontend
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Minimal network serving layer — the engine-side answer to the
-  * reference's two remote surfaces: the Avatica HTTP server
-  * (`readerator/server/.../FineoServer.java:49-66` — start an HTTP
-  * endpoint wrapping a JDBC-shaped service) and the REST proxy
-  * (`readerator/proxy/.../JdbcHandler.java:31-81` — take SQL over HTTP,
-  * execute as the keyed tenant, return rows as JSON).
+/** The REST routes of the serving listener — the engine-side answer to
+  * the reference's REST proxy (`readerator/proxy/.../JdbcHandler.java:31-81`
+  * — take SQL over HTTP, execute as the keyed tenant, return rows as
+  * JSON). The proxy reaches tenants through the one Avatica server's
+  * per-org connections, so these routes are mounted on
+  * [[GraftAvaticaServer]]'s listener and resolve tenants through its
+  * per-key [[TenantSession]] cache: one listener, one worker pool, one
+  * health and metrics surface, one session per tenant key.
   *
-  * Scope: this is deliberately a THIN shim over the in-process contract
-  * ([[TenantSession]] for statements, [[MetadataFacade]] for the six
-  * JDBC metadata calls a BI tool issues on connect). Transport is the
-  * JDK's built-in HTTP server — zero new dependencies; wire protocol is
-  * JSON. It is NOT Avatica/Arrow-Flight; a production deployment would
-  * swap the transport and keep the same two session objects, exactly as
-  * the reference's server wraps its engine-side connection.
-  *
-  * Tenancy model mirrors the reference: the API key IS the org id
-  * (`X-Api-Key` header, reference `FineoConnection` api-key property);
-  * every request resolves to a cached per-org [[TenantSession]], whose
+  * Scope: a THIN shim over the in-process contract ([[TenantSession]]
+  * for statements, [[MetadataFacade]] for the JDBC metadata calls a BI
+  * tool issues on connect); wire protocol is JSON. The session's
   * plan-level isolation (read-only surface, relation substitution,
-  * forced tenant predicates) does all security work — the HTTP layer
-  * adds nothing but status-code mapping, so there is no second policy
-  * to keep in sync.
+  * forced tenant predicates) does all security work — the routes add
+  * nothing but status-code mapping, so there is no second policy to keep
+  * in sync.
+  *
+  * Tenancy mirrors the reference: the API key IS the org id (`X-Api-Key`
+  * header, reference `FineoConnection` api-key property).
   *
   * Endpoints:
   *   - `POST /v1/sql` — body is the SQL text; optional `?maxRows=N`.
   *     Returns `{"columns":[…],"rows":[[…]…],"rowCount":N}`.
   *   - `GET /v1/metadata/{schemas|tables|columns|typeinfo}` with
   *     optional `table`/`column` LIKE-pattern params.
-  *   - `GET /healthz`.
+  *   - `GET /healthz[?tenant=KEY]` and `GET /metrics`.
   *
   * Errors: 401 missing key, 403 unknown tenant / isolation violation,
-  * 400 rejected statement (DML/DDL) or bad argument, 500 otherwise —
-  * the same mapping the reference's proxy applies to SQLExceptions. */
-class GraftHttpServer(
-    sessionFor: String => TenantSession,
-    port: Int = 0,
-    defaultMaxRows: Int = GraftHttpServer.DefaultMaxRows,
-    engine: Option[org.apache.spark.sql.SparkSession] = None,
-    val metrics: ServingMetrics = new ServingMetrics) {
-  require(defaultMaxRows > 0, "defaultMaxRows must be positive")
+  * 400 rejected statement (DML/DDL) or bad argument, 405 non-POST
+  * statement, 413 over-cap body, 500 otherwise — the same mapping the
+  * reference's proxy applies to SQLExceptions. */
+object GraftHttpServer {
+  /** Server-level row cap when the deployment doesn't configure one — the
+    * serving layer never runs an unbounded collect (reference
+    * `FineoJdbcMeta.setMaxRows` always clamps). */
+  val DefaultMaxRows = 10000
 
-  private val sessions =
-    new java.util.concurrent.ConcurrentHashMap[String, TenantSession]()
+  /** Mount the REST, health and metrics routes on `server`. The JDK
+    * server routes by longest matching prefix, so they win over the
+    * Avatica RPC route at "/".
+    *
+    * @param tenantFor the listener's per-key session cache (throws
+    *   SecurityException for an unknown key)
+    * @param maxRows the server's row cap; a request may only lower it */
+  private[frontend] def mount(
+      server: HttpServer,
+      tenantFor: String => TenantSession,
+      maxRows: Int,
+      engine: Option[org.apache.spark.sql.SparkSession],
+      metrics: ServingMetrics): Unit = {
 
-  // FAIR-scheduling precondition, checked ONCE per server: at boot when
-  // the engine session was passed, else at the first tenant session this
-  // server resolves (ServingFairness — warn + metric, the conf is static)
-  private val fairChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
-  engine.foreach { s =>
-    fairChecked.set(true)
-    ServingFairness.ensureFair(s, "GraftHttpServer", metrics)
-  }
+    def tenant(ex: HttpExchange): TenantSession = {
+      val key = Option(ex.getRequestHeaders.getFirst("X-Api-Key"))
+        .map(_.trim).filter(_.nonEmpty)
+        .getOrElse(throw Halt(401, "missing X-Api-Key"))
+      // resolution validates the org exists (SecurityException → 403)
+      tenantFor(key)
+    }
 
-  private def tenantSession(key: String): TenantSession = {
-    val t = sessions.computeIfAbsent(key, k => {
-      val s = sessionFor(k)
-      s.registerPoolGauges(metrics)
-      s
-    })
-    if (fairChecked.compareAndSet(false, true))
-      ServingFairness.ensureFair(t.spark, "GraftHttpServer", metrics)
-    t
-  }
+    /** Execute (collect) and encode a statement result. The collect is the
+      * terminal action — results stream to the client as one JSON body,
+      * bounded by the session's maxRows clamp. */
+    def dfJson(df: DataFrame): (Int, String) = {
+      val rows = df.collect()
+      metrics.inc("http.rows_served", rows.length.toLong)
+      val body = rows.map(r =>
+        (0 until r.length).map(i => JsonCodec.jval(r.get(i))).mkString("[", ",", "]"))
+      (200, df.columns.map(JsonCodec.jstr).mkString("{\"columns\":[", ",", "],") +
+        body.mkString("\"rows\":[", ",", "],") + s"\"rowCount\":${rows.length}}")
+    }
 
-  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    def route(path: String)(f: HttpExchange => (Int, String)): Unit =
+      server.createContext(path, (ex: HttpExchange) => {
+        val (status, body) =
+          try f(ex)
+          catch {
+            case h: Halt                          => (h.status, errJson(h.message))
+            case e: SecurityException             => (403, errJson(e.getMessage))
+            case e: UnsupportedOperationException => (400, errJson(e.getMessage))
+            case e: IllegalArgumentException      => (400, errJson(e.getMessage))
+            case e: Exception                     =>
+              (500, errJson(Option(e.getMessage).getOrElse(e.getClass.getName)))
+          }
+        if (status >= 400) metrics.inc("http.errors")
+        WireIo.send(ex, status, "application/json", body.getBytes(UTF_8))
+      })
 
-  metrics.gauge("http.open_sessions")(sessions.size().toLong)
+    // Layered health (reference `RootHealthCheck`/`IsAliveHealthCheck`
+    // tree): server-alive always; engine-alive (a real probe query with a
+    // deadline) when the server was built with its engine session;
+    // tenant-alive when the caller passes `?tenant=KEY`. Any failing
+    // layer → 503 with the layer named.
+    route("/healthz") { ex =>
+      // tenant layer: an unresolvable key is itself an UNHEALTHY tenant
+      // check (named), not a request error — health endpoints always answer
+      val tenantCheck = queryParams(ex).get("tenant").map { key =>
+        try HealthChecks.tenantAlive(tenantFor(key))
+        catch {
+          case e: Exception => HealthChecks.Check(s"tenant:$key", healthy = false,
+            Option(e.getMessage).getOrElse(e.getClass.getName), 0L)
+        }
+      }
+      HealthChecks.httpResponse(HealthChecks.run(engine, tenant = None) ++ tenantCheck)
+    }
 
-  private val server: HttpServer = {
-    val s = HttpServer.create(new InetSocketAddress(port), 0)
-    s.createContext("/healthz", handler(healthHandler))
-    s.createContext("/metrics", handler { _ => (200, metrics.snapshotJson) })
-    s.createContext("/v1/sql", handler(sqlHandler))
-    s.createContext("/v1/metadata/", handler(metadataHandler))
-    s.setExecutor(pool)
-    s.start()
-    s
-  }
+    route("/metrics")(_ => (200, metrics.snapshotJson))
 
-  /** Layered health (reference `RootHealthCheck`/`IsAliveHealthCheck`
-    * tree): server-alive always; engine-alive (a real probe query with a
-    * deadline) when the server was built with its engine session;
-    * tenant-alive when the caller passes `?tenant=KEY`. Any failing
-    * layer → 503 with the layer named. */
-  private def healthHandler(ex: HttpExchange): (Int, String) = {
-    val base = HealthChecks.run(engine, tenant = None)
-    // tenant layer: an unresolvable key is itself an UNHEALTHY tenant
-    // check (named), not a request error — health endpoints always answer
-    val tenantCheck = queryParams(ex).get("tenant").map { key =>
-      try HealthChecks.tenantAlive(tenantSession(key))
-      catch {
-        case e: Exception => HealthChecks.Check(s"tenant:$key", healthy = false,
-          Option(e.getMessage).getOrElse(e.getClass.getName), 0L)
+    route("/v1/sql") { ex =>
+      if (ex.getRequestMethod != "POST") throw Halt(405, "POST required")
+      metrics.inc("http.requests.sql")
+      val t = tenant(ex)
+      // bounded: a statement is kilobytes; an over-cap body is the
+      // client's mistake (413), never a serving-heap allocation
+      val sql = new String(
+        try WireIo.boundedBody(ex.getRequestBody)
+        catch { case e: WireIo.BodyTooLarge => throw Halt(413, e.getMessage) },
+        UTF_8)
+      if (sql.trim.isEmpty) throw Halt(400, "empty statement")
+      // The server-level cap ALWAYS applies; a request may only lower it
+      // (reference `FineoJdbcMeta.setMaxRows:143-159`). Without this, any
+      // tenant's `SELECT * FROM bigtable` is an unbounded driver collect.
+      val rows = queryParams(ex).get("maxRows")
+        .map(s => s.toIntOption.getOrElse(throw Halt(400, s"invalid maxRows: $s")))
+        .filter(_ > 0).fold(maxRows)(math.min(_, maxRows))
+      // execution runs gated: the tenant's FAIR pool + concurrency clamp
+      metrics.time("http.sql") {
+        t.runGated(dfJson(t.sql(sql, Some(rows))))
       }
     }
-    HealthChecks.httpResponse(base ++ tenantCheck)
-  }
 
-  /** Bound port (ephemeral when constructed with port = 0). */
-  def boundPort: Int = server.getAddress.getPort
-
-  /** Stop the endpoint AND its worker pool — HttpServer.stop leaves the
-    * executor alone, and 4 parked non-daemon threads would otherwise keep
-    * an embedding JVM alive after stop(). */
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdown()
-  }
-
-  // ------------------------------------------------------------- handlers
-
-  private def tenant(ex: HttpExchange): TenantSession = {
-    val key = Option(ex.getRequestHeaders.getFirst("X-Api-Key"))
-      .map(_.trim).filter(_.nonEmpty)
-      .getOrElse(throw Halt(401, "missing X-Api-Key"))
-    // open validates the org exists (SecurityException → 403)
-    tenantSession(key)
-  }
-
-  private def sqlHandler(ex: HttpExchange): (Int, String) = {
-    if (ex.getRequestMethod != "POST") throw Halt(405, "POST required")
-    metrics.inc("http.requests.sql")
-    val t = tenant(ex)
-    // bounded: a statement is kilobytes; an over-cap body is the
-    // client's mistake (413), never a serving-heap allocation
-    val sql = new String(
-      try WireIo.boundedBody(ex.getRequestBody)
-      catch { case e: WireIo.BodyTooLarge => throw Halt(413, e.getMessage) },
-      UTF_8)
-    if (sql.trim.isEmpty) throw Halt(400, "empty statement")
-    // The server-level cap ALWAYS applies; a request may only lower it
-    // (reference `FineoJdbcMeta.setMaxRows:143-159`). Without this, any
-    // tenant's `SELECT * FROM bigtable` is an unbounded driver collect.
-    val maxRows = queryParams(ex).get("maxRows")
-      .map(s => s.toIntOption.getOrElse(throw Halt(400, s"invalid maxRows: $s")))
-      .filter(_ > 0).fold(defaultMaxRows)(math.min(_, defaultMaxRows))
-    // execution runs gated: the tenant's FAIR pool + concurrency clamp
-    metrics.time("http.sql") {
-      t.runGated(dfJson(t.sql(sql, Some(maxRows))))
+    route("/v1/metadata/") { ex =>
+      metrics.inc("http.requests.metadata")
+      val t = tenant(ex)
+      val params = queryParams(ex)
+      val meta = t.metadata
+      val df = ex.getRequestURI.getPath.stripPrefix("/v1/metadata/") match {
+        case "schemas"  => meta.getSchemas()
+        case "tables"   => meta.getTables(tableNamePattern = params.get("table").orNull)
+        case "columns"  => meta.getColumns(
+          tableNamePattern = params.get("table").orNull,
+          columnNamePattern = params.get("column").orNull)
+        case "typeinfo" => meta.getTypeInfo
+        case other      => throw Halt(404, s"unknown metadata call: $other")
+      }
+      t.runGated(dfJson(df))
     }
   }
-
-  private def metadataHandler(ex: HttpExchange): (Int, String) = {
-    metrics.inc("http.requests.metadata")
-    val t = tenant(ex)
-    val params = queryParams(ex)
-    val meta = t.metadata
-    val df = ex.getRequestURI.getPath.stripPrefix("/v1/metadata/") match {
-      case "schemas"  => meta.getSchemas()
-      case "tables"   => meta.getTables(tableNamePattern = params.get("table").orNull)
-      case "columns"  => meta.getColumns(
-        tableNamePattern = params.get("table").orNull,
-        columnNamePattern = params.get("column").orNull)
-      case "typeinfo" => meta.getTypeInfo
-      case other      => throw Halt(404, s"unknown metadata call: $other")
-    }
-    t.runGated(dfJson(df))
-  }
-
-  // -------------------------------------------------------------- plumbing
 
   private case class Halt(status: Int, message: String)
       extends RuntimeException(message)
 
-  private def handler(f: HttpExchange => (Int, String)): HttpHandler =
-    (ex: HttpExchange) => {
-      val (status, body) =
-        try f(ex)
-        catch {
-          case h: Halt                          => (h.status, errJson(h.message))
-          case e: SecurityException             => (403, errJson(e.getMessage))
-          case e: UnsupportedOperationException => (400, errJson(e.getMessage))
-          case e: IllegalArgumentException      => (400, errJson(e.getMessage))
-          case e: Exception                     =>
-            (500, errJson(Option(e.getMessage).getOrElse(e.getClass.getName)))
-        }
-      if (status >= 400) metrics.inc("http.errors")
-      val bytes = body.getBytes(UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length)
-      val os = ex.getResponseBody
-      try os.write(bytes) finally os.close()
-    }
+  private def errJson(msg: String): String = s"""{"error":${JsonCodec.jstr(msg)}}"""
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split('&')
@@ -196,39 +164,4 @@ class GraftHttpServer(
         val Array(k, v) = kv.split("=", 2)
         java.net.URLDecoder.decode(k, UTF_8) -> java.net.URLDecoder.decode(v, UTF_8)
       }.toMap
-
-  /** Execute (collect) and encode a statement result. The collect is the
-    * terminal action — results stream to the client as one JSON body,
-    * bounded by the session's maxRows clamp. */
-  private def dfJson(df: DataFrame): (Int, String) = {
-    val cols = df.columns
-    val rows = df.collect()
-    metrics.inc("http.rows_served", rows.length.toLong)
-    val sb = new StringBuilder
-    sb.append("{\"columns\":[")
-    sb.append(cols.map(jstr).mkString(","))
-    sb.append("],\"rows\":[")
-    var first = true
-    rows.foreach { r =>
-      if (!first) sb.append(',')
-      first = false
-      sb.append('[')
-      sb.append((0 until r.length).map(i => jval(r.get(i))).mkString(","))
-      sb.append(']')
-    }
-    sb.append("],\"rowCount\":").append(rows.length).append('}')
-    (200, sb.toString)
-  }
-
-  private def errJson(msg: String): String = s"""{"error":${JsonCodec.jstr(msg)}}"""
-
-  private def jstr(s: String): String = JsonCodec.jstr(s)
-  private def jval(v: Any): String = JsonCodec.jval(v)
-}
-
-object GraftHttpServer {
-  /** Server-level row cap when the deployment doesn't configure one — the
-    * serving layer never runs an unbounded collect (reference
-    * `FineoJdbcMeta.setMaxRows` always clamps). */
-  val DefaultMaxRows = 10000
 }

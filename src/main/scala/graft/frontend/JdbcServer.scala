@@ -1,9 +1,8 @@
 package graft.frontend
 
-import graft.core.Assembler
 import graft.schema.SchemaRegistry
 import graft.sources.SourceSet
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.graftshim.GraftSessions
 import org.apache.spark.sql.hive.graftshim.ThriftShim
 
@@ -20,7 +19,7 @@ import org.apache.spark.sql.hive.graftshim.ThriftShim
   *   - each connection is bound to ONE validated tenant, as a
   *     [[TenantSession]] over the connection's own session — the same
   *     binding (org check, `runSQLOnFiles=false`, engine functions, errors
-  *     view) [[TenantSession.open]] gives the Avatica and HTTP wires;
+  *     view) [[TenantSession.open]] gives the Avatica listener's routes;
   *   - every session's parser is the [[WireQueryRewriter]] (injected via
   *     session extensions), so every statement any JDBC client sends —
   *     DDL, DML, `LOAD DATA`, `SET`, comment-disguised or EXPLAIN-wrapped
@@ -34,8 +33,9 @@ import org.apache.spark.sql.hive.graftshim.ThriftShim
   *     [[WireQueryRewriter]] splices every bare metric name with a freshly
   *     assembled plan pruned by the statement's own timestamp bounds — the
   *     same [[Substitution]] mechanism (and the same reference rule, R1)
-  *     as the HTTP/session path. The registered views remain only as the
-  *     metadata surface (SHOW TABLES, DatabaseMetaData);
+  *     as the REST/session path. The registered views are only the
+  *     metadata surface (SHOW TABLES, DatabaseMetaData): empty relations
+  *     with the metric's declared schema, no assembled plan;
   *   - **bounded result memory**: `spark.sql.thriftServer.
   *     incrementalCollect` is set on the serving session, so Spark's
   *     Thrift frontend streams result partitions through the driver
@@ -143,13 +143,15 @@ object GraftJdbcServer {
       }
       sess.conf.set("spark.sql.parser.escapedStringLiterals", "false")
       val tenant = TenantSession.bind(sess, registry, orgId, sources, errorsDir, maxRows)
-      // The tenant's metric tables as session views: statements never
-      // resolve through them (the rewriter substitutes pruned plans first)
-      // — they are the METADATA surface: SHOW TABLES and
-      // DatabaseMetaData.getTables/getColumns list session views.
+      // The tenant's metric tables as session views: they are the
+      // METADATA surface only (SHOW TABLES and DatabaseMetaData.getTables/
+      // getColumns list session views), so each is an EMPTY relation with
+      // the metric's declared schema. Statements never resolve through
+      // them — the rewriter substitutes pruned plans first — and a metric
+      // removed after this point reads as no rows, never as a stale table.
       registry.listTables(orgId).foreach { t =>
         registry.metric(orgId, t).foreach { m =>
-          Assembler.metricTable(sess, orgId, m, sources, sorted = false)
+          sess.createDataFrame(java.util.Collections.emptyList[Row](), m.structType)
             .createOrReplaceTempView(t)
         }
       }

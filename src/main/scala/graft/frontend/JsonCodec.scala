@@ -77,4 +77,14 @@ private[frontend] object WireIo {
     if (bytes.length > cap) throw new BodyTooLarge(cap)
     bytes
   }
+
+  /** Write one complete response: status, content type, body. */
+  def send(
+      ex: com.sun.net.httpserver.HttpExchange, status: Int, contentType: String,
+      body: Array[Byte]): Unit = {
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.sendResponseHeaders(status, body.length)
+    val os = ex.getResponseBody
+    try os.write(body) finally os.close()
+  }
 }

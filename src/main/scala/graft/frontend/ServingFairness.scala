@@ -22,6 +22,8 @@ import org.apache.spark.sql.SparkSession
   */
 object ServingFairness {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** How the scheduler mode is read off a session. A `var` ONLY as a
     * test seam: one SparkContext per JVM means a spec cannot boot a real
     * FIFO context next to the FAIR fixture, so the FIFO-boot spec swaps
@@ -32,7 +34,7 @@ object ServingFairness {
     _.sparkContext.getConf.get("spark.scheduler.mode", "FIFO")
 
   /** True iff the session's context schedules FAIR. When it doesn't,
-    * emit one loud warning naming the server and bump
+    * log one warning naming the server and bump
     * `serving.scheduler_not_fair` on `metrics` so the condition is
     * visible on the /metrics endpoint, not just in a boot log. */
   def ensureFair(spark: SparkSession, server: String, metrics: ServingMetrics): Boolean = {
@@ -40,10 +42,8 @@ object ServingFairness {
     val fair = mode.equalsIgnoreCase("FAIR")
     if (!fair) {
       metrics.inc("serving.scheduler_not_fair")
-      // stderr, deliberately: serving deployments scrape logs for WARN
-      // lines and this one must survive any logging-config accident
-      System.err.println(
-        s"WARN $server: spark.scheduler.mode=$mode (expected FAIR). Per-tenant " +
+      log.warn(
+        s"$server: spark.scheduler.mode=$mode (expected FAIR). Per-tenant " +
           "pools will NOT isolate tenants — one tenant's scan FIFO-head-blocks " +
           "every other tenant's statements. Set spark.scheduler.mode=FAIR on " +
           "the serving context at creation (static conf; cannot be fixed " +

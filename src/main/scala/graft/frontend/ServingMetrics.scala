@@ -14,8 +14,8 @@ import java.util.concurrent.atomic.{LongAdder, LongAccumulator}
   *   - gauges (live suppliers, e.g. open connections/statements).
   *
   * One instance is SHARED by all wire endpoints of a serving deployment
-  * (HTTP proxy, Avatica, Thrift rewriter) and exposed as a `/metrics`
-  * JSON endpoint on each HTTP-speaking wire. Naming convention is
+  * (REST routes, Avatica, Thrift rewriter) and exposed as the `/metrics`
+  * JSON endpoint of the one HTTP listener. Naming convention is
   * `<wire>.<metric>[.<detail>]`, e.g. `avatica.requests.fetch`,
   * `http.rows_served`, `thrift.statements.org1`. */
 final class ServingMetrics {
@@ -85,7 +85,7 @@ object ServingMetrics {
 
   /** Wire a standing ANN store's CUMULATIVE drift into the serving
     * registry as live gauges (basis points: drift × 10⁴, rounded), so
-    * index staleness shows on every `/metrics` endpoint beside the
+    * index staleness shows on the `/metrics` endpoint beside the
     * request counters — the operational half of the nightly drift gate
     * ([[graft.ops.AnnIndex.ingest]]/`ingestPq` return the same verdict
     * to their caller, but the serving deployment is what suffers the

@@ -5,6 +5,7 @@ import graft.schema.{Metric, SchemaRegistry}
 import graft.sources.SourceSet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.expressions.PipeOperator
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan, SubqueryAlias, UnresolvedWith}
 import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.graftshim.ColumnExpr
@@ -51,14 +52,17 @@ private[frontend] object Substitution {
 
   /** Conservative per-relation timestamp bounds: only honor Filter nodes
     * whose path down to THIS relation crosses Filter/SubqueryAlias nodes
-    * exclusively. A filter sitting above a Project/Aggregate can reference
-    * a rebound `timestamp` (e.g. `timestamp - 1000 AS timestamp`) — its
-    * bounds say nothing about storage timestamps, so it widens to Full
-    * (the widen-don't-narrow contract, `TimestampExpressionBuilder`). */
+    * and pipe-syntax markers (`PipeOperator`, an identity node the
+    * analyzer removes) exclusively. A filter sitting above a
+    * Project/Aggregate can reference a rebound `timestamp` (e.g.
+    * `timestamp - 1000 AS timestamp`) — its bounds say nothing about
+    * storage timestamps, so it widens to Full (the widen-don't-narrow
+    * contract, `TimestampExpressionBuilder`). */
   def boundsFor(rel: UnresolvedRelation, plan: LogicalPlan): TimeRange = {
     def reaches(p: LogicalPlan): Boolean = p match {
       case f: LFilter       => reaches(f.child)
       case s: SubqueryAlias => reaches(s.child)
+      case o: PipeOperator  => reaches(o.child)
       case r: UnresolvedRelation => r eq rel
       case _ => false
     }

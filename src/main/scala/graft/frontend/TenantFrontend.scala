@@ -37,8 +37,9 @@ import org.apache.spark.sql.types._
   *
   * Time-range source pruning (reference R1) happens during substitution:
   * each relation's bounds come only from Filter nodes separated from it by
-  * Filter/SubqueryAlias nodes alone — a filter above a Project/Aggregate
-  * may reference a *rebound* `timestamp` and must widen, not narrow.
+  * Filter/SubqueryAlias/pipe-marker nodes alone — a filter above a
+  * Project/Aggregate may reference a *rebound* `timestamp` and must widen,
+  * not narrow.
   */
 /** Admission-control rejection: the tenant's concurrent-statement clamp
   * timed out BEFORE any execution started, so retrying (after backing
@@ -88,7 +89,11 @@ class TenantSession private (
   /** Per-tenant concurrent-statement clamp (reference topology: one
     * engine, many tenants — without a clamp one tenant can occupy every
     * server thread). Permits bound EXECUTIONS in flight, not open
-    * statements: acquire blocks up to 60 s then fails loudly. */
+    * statements: acquire blocks up to 60 s then fails loudly. The clamp
+    * is per SESSION, so it is per tenant exactly when one session serves
+    * the tenant: [[GraftAvaticaServer]] resolves each key once, and all of
+    * that key's connections and REST requests run under this one
+    * semaphore. */
   private val stmtPermits =
     new java.util.concurrent.Semaphore(math.max(1, maxConcurrentStatements), true)
 
@@ -126,7 +131,9 @@ class TenantSession private (
     * admission clamp, and statements admitted and in flight — the
     * attribution metrics for serving-isolation regressions (a p95
     * isolation creep is then readable as queue depth, not guessed).
-    * Idempotent: gauges re-register by name. */
+    * Gauges register by name, so a server calls this once per tenant key
+    * (its session cache does) and the gauges read the one session every
+    * statement of that key runs on. */
   def registerPoolGauges(metrics: ServingMetrics): Unit = {
     metrics.gauge(s"pool.$orgId.running_tasks")(
       spark.sparkContext.getPoolForName(schedulerPool)

@@ -27,9 +27,9 @@ object BoundsForProps extends Properties("Substitution.boundsFor") {
       s"SELECT * FROM m AS s WHERE $sp" -> Seq(p),
       s"SELECT v FROM (SELECT * FROM m WHERE $sp) AS s" -> Seq(p),
       s"WITH t AS (SELECT * FROM m WHERE $sp) SELECT v FROM t" -> Seq(p),
-      // stacked filters: a projection or a pipe-operator boundary sits
-      // between the outer filter and the relation, so only the inner one
-      // may bound it
+      // stacked filters: a projection between the outer filter and the
+      // relation leaves only the inner one to bound it; a pipe chain
+      // passes both
       s"SELECT * FROM (SELECT * FROM m WHERE $sp) AS s WHERE $sq" -> Seq(p, q),
       s"FROM m |> WHERE $sp |> WHERE $sq" -> Seq(p, q))
   } yield stmt
@@ -47,6 +47,13 @@ object BoundsForProps extends Properties("Substitution.boundsFor") {
     forAll(genStatement, genTs) { case ((sql, filters), ts) =>
       val r = bounds(sql)
       !filters.forall(eval(_, ts)) || (ts >= r.min && ts <= r.max)
+    }
+
+  property("a pipe chain gets the bounds of the equivalent WHERE") =
+    forAll(genTP(3), genTP(2)) { (p, q) =>
+      val (sp, sq) = (toSql(p), toSql(q))
+      bounds(s"FROM m |> WHERE $sp |> WHERE $sq") ==
+        bounds(s"SELECT * FROM m WHERE ($sp) AND ($sq)")
     }
 
   property("a projection that rebinds timestamp gives Full") =

@@ -13,10 +13,10 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
 
-/** Client round-trip over the network serving layer: real HTTP socket,
-  * real tenant sessions — the engine-side counterpart of the reference's
-  * server/proxy tests (`TestFineoServer.java`, proxy `JdbcHandler`
-  * round-trips). */
+/** Client round-trip over the REST routes of the serving listener
+  * ([[GraftAvaticaServer]] mounts them): real HTTP socket, real tenant
+  * sessions — the engine-side counterpart of the reference's server/proxy
+  * tests (`TestFineoServer.java`, proxy `JdbcHandler` round-trips). */
 class HttpServerSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkFixture.spark
   import scala.jdk.CollectionConverters._
@@ -40,7 +40,7 @@ class HttpServerSpec extends AnyFunSuite with Matchers {
     SourceSet(fs = Seq(FsSource("parquet", dir)))
   }
 
-  private lazy val server = new GraftHttpServer(
+  private lazy val server = new GraftAvaticaServer(
     key => TenantSession.open(spark, registry, key, sources))
   private lazy val base = s"http://127.0.0.1:${server.boundPort}"
   private val client = HttpClient.newHttpClient()
@@ -144,9 +144,9 @@ class HttpServerSpec extends AnyFunSuite with Matchers {
   test("server-level maxRows always clamps; a request can only lower it") {
     // an unclamped SELECT * must never be an unbounded driver collect —
     // the server default applies even when the client sends nothing
-    val small = new GraftHttpServer(
+    val small = new GraftAvaticaServer(
       key => TenantSession.open(spark, registry, key, sources),
-      defaultMaxRows = 2)
+      serverMaxRows = 2)
     try {
       val b = s"http://127.0.0.1:${small.boundPort}"
       def postTo(path: String, body: String) = {

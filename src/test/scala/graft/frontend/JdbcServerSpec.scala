@@ -29,7 +29,9 @@ class JdbcServerSpec extends AnyFunSuite with Matchers {
         // nearline-style number-as-string storage cast to a declared decimal
         Field("amt", FieldType.DECIMAL, decimal = Some((20, 4))))),
       // nearline-only metric: drives the wire-path time-pruning tests
-      Metric("mn", "nlmetric", Seq(Field("v", FieldType.LONG))))),
+      Metric("mn", "nlmetric", Seq(Field("v", FieldType.LONG))),
+      // removed mid-connection by the metric-deletion test
+      Metric("mr", "rmmetric", Seq(Field("v", FieldType.LONG))))),
     Org("orgz", Seq(Metric("mz", "zmetric", Seq(Field("v", FieldType.LONG))))))
 
   private lazy val sources: SourceSet = {
@@ -47,6 +49,9 @@ class JdbcServerSpec extends AnyFunSuite with Matchers {
       .write.mode("overwrite").parquet(s"$dir/0/parquet/orgj/mj")
     spark.createDataFrame(rows.asJava, schema)
       .write.mode("overwrite").parquet(s"$dir/0/parquet/orgz/mz")
+    spark.createDataFrame(Seq(
+      Row("orgj", "mr", 50L, 5L, null), Row("orgj", "mr", 60L, 6L, null)).asJava, schema)
+      .write.mode("overwrite").parquet(s"$dir/0/parquet/orgj/mr")
     // Two nearline windows feeding metric mn only (windows far above the
     // archive timestamps, so the overlap cutoff leaves jdbcmetric alone).
     val nlSchema = StructType(Seq(
@@ -292,6 +297,25 @@ class JdbcServerSpec extends AnyFunSuite with Matchers {
       } finally c.close()
     }
     e.getMessage should include("no tenant key")
+  }
+
+  test("a metric removed while a connection is open yields no rows on it") {
+    withConn() { c =>
+      val st = c.createStatement()
+      val before = st.executeQuery("SELECT count(*) FROM rmmetric")
+      before.next() shouldBe true
+      before.getLong(1) shouldBe 2L
+      registry.removeMetric("orgj", "rmmetric")
+      // the connection's metadata view of the metric outlives it; reading
+      // that name must not serve the removed metric's stored rows
+      scala.util.Try {
+        val rs = st.executeQuery("SELECT * FROM rmmetric")
+        Iterator.continually(rs).takeWhile(_.next()).size
+      } match {
+        case scala.util.Success(n) => n shouldBe 0
+        case scala.util.Failure(e) => e shouldBe a[java.sql.SQLException]
+      }
+    }
   }
 
   test("an unknown tenant key is refused at connection open") {

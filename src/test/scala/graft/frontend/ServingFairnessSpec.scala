@@ -8,7 +8,12 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import java.io.{ByteArrayOutputStream, PrintStream}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
+
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpResponse.BodyHandlers
@@ -45,26 +50,44 @@ class ServingFairnessSpec extends AnyFunSuite with Matchers {
     try f finally ServingFairness.modeOf = prev
   }
 
-  private def capturingErr[A](f: => A): (A, String) = {
-    val buf = new ByteArrayOutputStream()
-    val prev = System.err
-    System.setErr(new PrintStream(buf, true))
-    val a = try f finally System.setErr(prev)
-    (a, buf.toString)
+  /** Run `f`, returning what ServingFairness logged meanwhile, one
+    * `LEVEL message` line per event. The fixture context logs at ERROR,
+    * so the capture lowers this one logger to WARN and restores it. */
+  private def capturingWarn[A](f: => A): (A, String) = {
+    val name = ServingFairness.getClass.getName
+    val logger = LogManager.getLogger(name).asInstanceOf[core.Logger]
+    val prevLevel = logger.getLevel
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(
+        "serving-fairness-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        events.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}\n")
+    }
+    appender.start()
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(appender)
+    val a =
+      try f
+      finally {
+        logger.removeAppender(appender)
+        Configurator.setLevel(name, prevLevel)
+        appender.stop()
+      }
+    (a, events.asScala.mkString)
   }
 
   test("booting a server on a FIFO context warns loudly and bumps the metric") {
     val metrics = new ServingMetrics
-    val ((), err) = capturingErr {
+    val ((), err) = capturingWarn {
       withMode("FIFO") {
-        val s = new GraftHttpServer(
+        val s = new GraftAvaticaServer(
           key => TenantSession.open(spark, registry, key, sources),
           engine = Some(spark), metrics = metrics)
         s.stop()
       }
     }
     metrics.counter("serving.scheduler_not_fair") shouldBe 1L
-    err should include("WARN GraftHttpServer")
+    err should include("WARN GraftAvaticaServer")
     err should include("spark.scheduler.mode=FIFO")
     err should include("FAIR")
     err should include("graft-fairscheduler.xml")
@@ -72,15 +95,15 @@ class ServingFairnessSpec extends AnyFunSuite with Matchers {
 
   test("booting on the FAIR fixture context is silent (real conf, no seam)") {
     val metrics = new ServingMetrics
-    val ((), err) = capturingErr {
-      val s = new GraftHttpServer(
+    val ((), err) = capturingWarn {
+      val s = new GraftAvaticaServer(
         key => TenantSession.open(spark, registry, key, sources),
         engine = Some(spark), metrics = metrics)
       s.stop()
     }
     metrics.counter("serving.scheduler_not_fair") shouldBe 0L
     err should not include "scheduler_not_fair"
-    err should not include "WARN GraftHttpServer"
+    err should not include "WARN GraftAvaticaServer"
     // and the check itself agrees with the fixture conf
     ServingFairness.ensureFair(spark, "spec", metrics) shouldBe true
   }
@@ -88,9 +111,9 @@ class ServingFairnessSpec extends AnyFunSuite with Matchers {
   test("engine-less server checks at the FIRST tenant session, once") {
     val metrics = new ServingMetrics
     val client = HttpClient.newHttpClient()
-    val (resp, err) = capturingErr {
+    val (resp, err) = capturingWarn {
       withMode("FIFO") {
-        val s = new GraftHttpServer(
+        val s = new GraftAvaticaServer(
           key => TenantSession.open(spark, registry, key, sources),
           engine = None, metrics = metrics)
         try {
@@ -106,12 +129,12 @@ class ServingFairnessSpec extends AnyFunSuite with Matchers {
     }
     resp.statusCode() shouldBe 200
     metrics.counter("serving.scheduler_not_fair") shouldBe 1L
-    err should include("WARN GraftHttpServer")
+    err should include("WARN GraftAvaticaServer")
   }
 
   test("avatica boot on a FIFO context warns with its own server name") {
     val metrics = new ServingMetrics
-    val ((), err) = capturingErr {
+    val ((), err) = capturingWarn {
       withMode("FIFO") {
         val s = new GraftAvaticaServer(
           key => TenantSession.open(spark, registry, key, sources),

@@ -1,6 +1,6 @@
 package graft.frontend
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.SparkFixture
 import graft.schema._
 import graft.sources._
@@ -23,10 +23,11 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
   *     query under a deadline) / tenant-alive, healthy AND induced-failure
   *     paths with the failing layer named;
   *   - the shared metrics registry: per-RPC counters/timers move under
-  *     real wire traffic on both HTTP and Avatica endpoints;
+  *     real wire traffic on both the REST and the Avatica routes of the
+  *     one listener;
   *   - per-tenant FAIR scheduler pools + the concurrent-statement clamp:
   *     tenant B's point query completes while tenant A's slow job still
-  *     occupies the context. */
+  *     occupies the context, and one key's connections share one clamp. */
 class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   private lazy val spark = SparkFixture.spark
   import scala.jdk.CollectionConverters._
@@ -49,20 +50,15 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     SourceSet(fs = Seq(FsSource("parquet", dir)))
   }
 
-  private lazy val httpServer = new GraftHttpServer(
-    key => TenantSession.open(spark, registry, key, sources),
-    engine = Some(spark))
-  private lazy val avServer = new GraftAvaticaServer(
+  // the one serving listener: REST routes, Avatica RPCs, health, metrics
+  private lazy val server = new GraftAvaticaServer(
     key => TenantSession.open(spark, registry, key, sources),
     engine = Some(spark))
 
   private val client = HttpClient.newHttpClient()
   private val mapper = new ObjectMapper()
 
-  override def afterAll(): Unit = {
-    httpServer.stop()
-    avServer.stop()
-  }
+  override def afterAll(): Unit = server.stop()
 
   private def get(port: Int, path: String, key: Option[String] = None)
       : HttpResponse[String] = {
@@ -82,7 +78,7 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   // --------------------------------------------------------- health checks
 
   test("healthz: server + engine layers healthy on a live engine") {
-    val r = get(httpServer.boundPort, "/healthz")
+    val r = get(server.boundPort, "/healthz")
     r.statusCode() shouldBe 200
     val j = mapper.readTree(r.body())
     j.get("status").asText() shouldBe "ok"
@@ -92,13 +88,13 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   }
 
   test("healthz: tenant layer probes a real statement through the tenant session") {
-    val r = get(httpServer.boundPort, "/healthz?tenant=orgx")
+    val r = get(server.boundPort, "/healthz?tenant=orgx")
     r.statusCode() shouldBe 200
     r.body() should include("tenant:orgx")
   }
 
   test("healthz: unknown tenant fails the TENANT layer (503, layer named), others stay healthy") {
-    val r = get(httpServer.boundPort, "/healthz?tenant=nosuch")
+    val r = get(server.boundPort, "/healthz?tenant=nosuch")
     r.statusCode() shouldBe 503
     val j = mapper.readTree(r.body())
     j.get("status").asText() shouldBe "fail"
@@ -117,10 +113,10 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   }
 
   test("avatica endpoint serves the same layered healthz and a metrics snapshot") {
-    val h = get(avServer.boundPort, "/healthz")
+    val h = get(server.boundPort, "/healthz")
     h.statusCode() shouldBe 200
     h.body() should include(""""name":"engine"""")
-    val m = get(avServer.boundPort, "/metrics")
+    val m = get(server.boundPort, "/metrics")
     m.statusCode() shouldBe 200
     m.body() should include("counters")
   }
@@ -128,30 +124,30 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   // --------------------------------------------------------------- metrics
 
   test("http metrics: request/row/error counters move under real traffic") {
-    val m0 = httpServer.metrics.counter("http.requests.sql")
-    val rows0 = httpServer.metrics.counter("http.rows_served")
-    val err0 = httpServer.metrics.counter("http.errors")
-    post(httpServer.boundPort, "/v1/sql", "SELECT v FROM xmetric", Some("orgx"))
+    val m0 = server.metrics.counter("http.requests.sql")
+    val rows0 = server.metrics.counter("http.rows_served")
+    val err0 = server.metrics.counter("http.errors")
+    post(server.boundPort, "/v1/sql", "SELECT v FROM xmetric", Some("orgx"))
       .statusCode() shouldBe 200
-    post(httpServer.boundPort, "/v1/sql", "DROP TABLE xmetric", Some("orgx"))
+    post(server.boundPort, "/v1/sql", "DROP TABLE xmetric", Some("orgx"))
       .statusCode() should be >= 400
-    httpServer.metrics.counter("http.requests.sql") shouldBe (m0 + 2)
-    httpServer.metrics.counter("http.rows_served") shouldBe (rows0 + 5)
-    httpServer.metrics.counter("http.errors") should be >= (err0 + 1)
-    httpServer.metrics.timerCount("http.sql") should be >= 1L
+    server.metrics.counter("http.requests.sql") shouldBe (m0 + 2)
+    server.metrics.counter("http.rows_served") shouldBe (rows0 + 5)
+    server.metrics.counter("http.errors") should be >= (err0 + 1)
+    server.metrics.timerCount("http.sql") should be >= 1L
     // the /metrics endpoint exposes the same registry as JSON
-    val snap = get(httpServer.boundPort, "/metrics").body()
+    val snap = get(server.boundPort, "/metrics").body()
     snap should include(""""http.requests.sql"""")
     snap should include(""""http.open_sessions"""")
   }
 
   test("avatica metrics: per-RPC counters, frames and open-resource gauges move") {
     def rpc(json: String) = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${avServer.boundPort}/"))
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${server.boundPort}/"))
         .POST(BodyPublishers.ofString(json)).build(),
       BodyHandlers.ofString())
-    val open0 = avServer.metrics.counter("avatica.requests.openConnection")
-    val rows0 = avServer.metrics.counter("avatica.rows_served")
+    val open0 = server.metrics.counter("avatica.requests.openConnection")
+    val rows0 = server.metrics.counter("avatica.rows_served")
     rpc("""{"request":"openConnection","connectionId":"cm1","info":{"apikey":"orgx"}}""")
       .statusCode() shouldBe 200
     rpc("""{"request":"createStatement","connectionId":"cm1"}""").statusCode() shouldBe 200
@@ -160,16 +156,16 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
       .get("statementId").asInt()
     rpc(s"""{"request":"prepareAndExecute","connectionId":"cm1","statementId":$sid,""" +
       s""""sql":"SELECT v FROM xmetric","maxRowCount":-1}""").statusCode() shouldBe 200
-    avServer.metrics.counter("avatica.requests.openConnection") shouldBe (open0 + 1)
-    avServer.metrics.counter("avatica.requests.prepareAndExecute") should be >= 1L
-    avServer.metrics.counter("avatica.rows_served") shouldBe (rows0 + 5)
-    avServer.metrics.counter("avatica.frames_served") should be >= 1L
-    val snap = get(avServer.boundPort, "/metrics").body()
+    server.metrics.counter("avatica.requests.openConnection") shouldBe (open0 + 1)
+    server.metrics.counter("avatica.requests.prepareAndExecute") should be >= 1L
+    server.metrics.counter("avatica.rows_served") shouldBe (rows0 + 5)
+    server.metrics.counter("avatica.frames_served") should be >= 1L
+    val snap = get(server.boundPort, "/metrics").body()
     snap should include(""""avatica.open_connections":1""")
     // errors counter: an RPC on a closed connection
     val bad = rpc("""{"request":"createStatement","connectionId":"nope"}""")
     bad.statusCode() shouldBe 500
-    avServer.metrics.counter("avatica.errors") should be >= 1L
+    server.metrics.counter("avatica.errors") should be >= 1L
   }
 
   // ------------------------------------------- FAIR pools + statement clamp
@@ -289,6 +285,70 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     holder.join(5000)
   }
 
+  test("connections of one key share its clamp: B's execute is refused 53300 while A's runs") {
+    // one permit per tenant, 1 s admission wait: the clamp bounds the
+    // TENANT, however many connections it opens
+    val srv = new GraftAvaticaServer(key => {
+      val t = TenantSession.open(spark, registry, key, sources, maxConcurrentStatements = 1)
+      t.spark.conf.set("spark.graft.statementClampTimeoutSec", "1")
+      t
+    })
+    try {
+      def rpc(json: String): (Int, JsonNode) = {
+        val r = post(srv.boundPort, "/", json, key = None)
+        (r.statusCode(), mapper.readTree(r.body()))
+      }
+      def openStatement(cid: String): Int = {
+        rpc(s"""{"request":"openConnection","connectionId":"$cid","info":{"apikey":"orgx"}}""")
+          ._1 shouldBe 200
+        rpc(s"""{"request":"createStatement","connectionId":"$cid"}""")
+          ._2.get("statementId").asInt()
+      }
+      def execute(cid: String, sid: Int, sql: String): (Int, JsonNode) = rpc(
+        s"""{"request":"prepareAndExecute","connectionId":"$cid","statementId":$sid,""" +
+          s""""sql":${JsonCodec.jstr(sql)},"maxRowCount":-1}""")
+      val sidA = openStatement("clampA")
+      val first = new java.util.concurrent.atomic.AtomicReference[(Int, JsonNode)]()
+      val holder = new Thread(() => first.set(execute("clampA", sidA,
+        "SELECT java_method('java.lang.Thread', 'sleep', 4000L) AS slept")), "clamp-wire-holder")
+      holder.start()
+      def inflight = srv.metrics.gaugeValue("pool.orgx.inflight_statements")
+      val deadline = System.nanoTime() + 20L * 1000000000L
+      while (inflight < 1 && System.nanoTime() < deadline) Thread.sleep(20)
+      inflight shouldBe 1L // A's statement holds the permit
+      val sidB = openStatement("clampB")
+      val (st, err) = execute("clampB", sidB, "SELECT v FROM xmetric")
+      st shouldBe 500
+      err.get("sqlState").asText() shouldBe "53300"
+      err.get("errorMessage").asText() should include("concurrent-statement limit")
+      holder.join(30000)
+      first.get()._1 shouldBe 200
+    } finally srv.stop()
+  }
+
+  test("REST requests and Avatica connections of one key call sessionFor once") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = new GraftAvaticaServer(key => {
+      calls.incrementAndGet()
+      TenantSession.open(spark, registry, key, sources)
+    })
+    try {
+      for (cid <- Seq("once1", "once2"))
+        post(srv.boundPort, "/",
+          s"""{"request":"openConnection","connectionId":"$cid","info":{"apikey":"orgx"}}""",
+          key = None).statusCode() shouldBe 200
+      val r = post(srv.boundPort, "/v1/sql", "SELECT count(*) AS n FROM xmetric", Some("orgx"))
+      r.statusCode() shouldBe 200
+      r.body() shouldBe """{"columns":["n"],"rows":[[5]],"rowCount":1}"""
+      get(srv.boundPort, "/healthz?tenant=orgx").statusCode() shouldBe 200
+      calls.get() shouldBe 1
+      // an unknown key is refused and caches nothing
+      post(srv.boundPort, "/v1/sql", "SELECT 1", Some("nosuch")).statusCode() shouldBe 403
+      post(srv.boundPort, "/v1/sql", "SELECT 1", Some("nosuch")).statusCode() shouldBe 403
+      calls.get() shouldBe 3
+    } finally srv.stop()
+  }
+
   // ------------------------------------------------- ANN drift gauge
 
   test("ANN drift gauge on /metrics: moves under sub-gate ingests, resets after refine") {
@@ -300,10 +360,10 @@ class ServingOpsSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     val store = SparkFixture.tempDir("servops-ann")
     graft.ops.AnnIndex.bootstrap(vecs(0 until 100), "vec_id", "embedding",
       numCentroids = 4, store)
-    ServingMetrics.registerAnnDrift(httpServer.metrics, spark, "vecidx",
+    ServingMetrics.registerAnnDrift(server.metrics, spark, "vecidx",
       ivfStore = Some(store))
     def gaugeBp(): Long = {
-      val snap = get(httpServer.boundPort, "/metrics")
+      val snap = get(server.boundPort, "/metrics")
       snap.statusCode() shouldBe 200
       val node = mapper.readTree(snap.body()).path("gauges")
         .path("ann.vecidx.drift_bp")
